@@ -50,8 +50,17 @@ def _dbl_order_key(s) -> tuple:
     return (1, 0.0) if math.isnan(v) else (0, v)
 
 # distinct from None (a legitimate SQL NULL value) in the metadata
-# GROUP BY fast path: "this group cannot be proven — fall back"
+# aggregate fast path: "this group cannot be proven — fall back"
 _REFUSE = object()
+
+
+def _proven(r, i: int | None = None):
+    """A ``LakeSoulTable._*_files`` result as a carrier value: their
+    ``None`` (unprovable) becomes ``_REFUSE``; ``i`` picks one element
+    of a tuple result."""
+    if r is None:
+        return _REFUSE
+    return r if i is None else r[i]
 
 _INT_DESC_RE = re.compile(r"^[+-]?[0-9]+$")
 
@@ -950,22 +959,20 @@ class Catalog:
             ddl += f"\nLOCATION '{info.path}'"
             return spark.createDataFrame([(ddl,)], "createtab_stmt string")
 
-        # metadata-only fast path for the most common ad-hoc probes:
-        # a SELECT of only COUNT(*)/COUNT(col)/MIN/MAX/SUM/AVG(col)
-        # items over one table, bare or with a PARTITION-ONLY WHERE
-        # (and optional VERSION AS OF / GROUP BY over range-partition
-        # columns), answers from the commit log (count_fast /
-        # min_max_fast / sum_fast) with ZERO file IO and zero scan jobs —
-        # the result is a LocalTableScan whose collect() doesn't even
-        # launch a job. Dispatches only when EVERY item can PROVE
-        # physical == logical (no CDC, no multi-generation PK buckets
-        # in the scoped partitions, num_rows/stats everywhere, exact
-        # stats types for min/max, and any WHERE a deterministic
-        # predicate over range-partition columns only — reference
-        # PartitionFilter.scala prunes in PG metadata the same way);
-        # anything unprovable — a data-column predicate, a GROUP BY
-        # tail, any other SELECT shape — falls through to the
-        # relational path below unchanged (never wrong, just a scan).
+        # metadata-only fast path for the common ad-hoc probes: a SELECT
+        # of COUNT/MIN/MAX/SUM/AVG items over one table, bare or with a
+        # PARTITION-ONLY WHERE, optional VERSION/TIMESTAMP AS OF, and an
+        # optional GROUP BY over range-partition columns with HAVING,
+        # ORDER BY and LIMIT (or SELECT DISTINCT over those columns).
+        # The commit log proves the per-group values (num_rows, stats,
+        # recorded sums; reference PartitionFilter.scala prunes in PG
+        # metadata the same way), Catalyst evaluates the projection and
+        # HAVING over one LocalRelation row per group, and the driver
+        # sorts — a LocalTableScan whose collect() launches no job.
+        # Anything unprovable (CDC, multi-generation PK buckets in scope,
+        # a missing stat, a data-column WHERE or GROUP BY, another
+        # SELECT shape) falls through to the relational path below
+        # unchanged: never wrong, just a scan.
         am = re.match(
             r"SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<tbl>[\w.]+)"
             r"(?:\s+VERSION\s+AS\s+OF\s+(?P<ver>\d+)"
@@ -979,22 +986,16 @@ class Catalog:
             stmt, re.I | re.S,
         )
         if am:
-            if am.group("gby"):
-                fast = self._try_metadata_group_by(spark, am)
-            else:
-                dm = re.match(r"DISTINCT\s+(.+)$", am.group("items"),
-                              re.I | re.S)
-                if dm is not None:
-                    # SELECT DISTINCT <range-partition cols> ≡ GROUP BY
-                    # those columns: the distinct partition tuples are
-                    # the commit log's descs (with ≥1 live row) — the
-                    # other canonical freshness probe, zero jobs; any
-                    # non-bare-partition item refuses inside
-                    fast = self._try_metadata_group_by(
-                        spark, am, items_txt=dm.group(1),
-                        group_txt=dm.group(1))
-                else:
-                    fast = self._try_metadata_aggs(spark, am)
+            items, gby = am.group("items"), am.group("gby")
+            dm = None if gby else re.match(r"DISTINCT\s+(.+)$", items,
+                                            re.I | re.S)
+            if dm is not None:
+                # SELECT DISTINCT <range-partition cols> ≡ GROUP BY
+                # those columns: the distinct partition tuples are the
+                # commit log's descs with ≥1 live row (the other
+                # canonical freshness probe); any other item refuses
+                items = gby = dm.group(1)
+            fast = self._try_metadata_group_by(spark, am, items, gby)
             if fast is not None:
                 return fast
 
@@ -1020,15 +1021,26 @@ class Catalog:
             stmt = self._register_referenced(spark, stmt, register_all=True)
             return spark.sql(stmt)
 
-    _META_AGG_RE = re.compile(
-        r"^COUNT\s*\(\s*(?:\*|1)\s*\)(?:\s+AS\s+(\w+))?$"
-        r"|^(MIN|MAX|SUM|AVG|COUNT)\s*\("
-        r"\s*`?(?!(?:DISTINCT|ALL)\b)(\w+)`?\s*\)"
-        r"(?:\s+AS\s+(\w+))?$"
-        r"|^COUNT\s*\(\s*DISTINCT\s+`?(\w+)`?\s*\)"
-        r"(?:\s+AS\s+(\w+))?$",
+    # one aggregate call of the provable family, wherever it appears:
+    # COUNT(*|1), COUNT(DISTINCT c), MIN/MAX/SUM/AVG/COUNT(c)
+    _AGG_CALL_RE = re.compile(
+        r"(?<![\w.])(?:COUNT\s*\(\s*(?:\*|1)\s*\)"
+        r"|(?P<fn>MIN|MAX|SUM|AVG|COUNT)\s*\("
+        r"\s*`?(?!(?:DISTINCT|ALL)\b)(?P<col>\w+)`?\s*\)"
+        r"|COUNT\s*\(\s*DISTINCT\s+`?(?P<dcol>\w+)`?\s*\))",
         re.I,
     )
+
+    @staticmethod
+    def _agg_call(cm) -> tuple:
+        """``(fn, column as written)`` of an :attr:`_AGG_CALL_RE` match:
+        fn is count/cntd/min/max/sum/avg; the column is ``None`` for
+        ``COUNT(*)``."""
+        if cm.group("dcol"):
+            return "cntd", cm.group("dcol")
+        if cm.group("fn"):
+            return cm.group("fn").lower(), cm.group("col")
+        return "count", None
 
     # range-partition desc values order correctly under these declared
     # types (ints numerically after the strict parse; dates as
@@ -1097,263 +1109,6 @@ class Catalog:
                 rows.get(f.partition_desc, 0) + f.num_rows)
         return rows
 
-    def _try_metadata_aggs(self, spark: SparkSession, m) -> DataFrame | None:
-        """Resolve a SELECT of only ``COUNT(*)``/``COUNT(col)``/
-        ``MIN``/``MAX``/``SUM``/``AVG(col)`` items against commit-log
-        metadata. Returns the one-row result as a VALUES-backed
-        LocalTableScan (collect launches no job), or ``None`` whenever
-        ANY item is unprovable — unknown table, non-agg item,
-        string/float/decimal min/max without writer-computed exact
-        extrema (footer strings may be truncated, footer floats
-        NaN-lossy), SUM outside integer/decimal, AVG outside the
-        integer family or past the 2^53 double-accumulation proof,
-        CDC / churned tables, or a WHERE the partition pruner refuses.
-        Timestamp extrema render as Z-suffixed literals, exact in any
-        session timezone. Output column names match
-        the relational fallback's auto-aliases — ``count(1)``, and
-        otherwise the function lowercased with the argument in the
-        QUERY's casing (backticks stripped) — so the schema never
-        depends on which path answered."""
-        items = [s.strip() for s in m.group("items").split(",")]
-        parsed = []
-        for it in items:
-            im = self._META_AGG_RE.match(it)
-            if im is None:
-                return None
-            if im.group(5):  # COUNT(DISTINCT col) — group 5 = USER casing
-                parsed.append(("cntd", im.group(5), im.group(6)))
-            elif im.group(2):  # MIN/MAX — group(3) keeps the USER casing
-                parsed.append((im.group(2).lower(), im.group(3),
-                               im.group(4)))
-            else:
-                parsed.append(("count", None, im.group(1)))
-        ns, name = self._split_name(m.group("tbl"))
-        if not self.table_exists(name, ns):
-            return None
-        t = self.get_table(spark, name, ns)
-        if m.group("ver") is not None:
-            t = LakeSoulTable.for_path_snapshot(
-                spark, t.path, version=int(m.group("ver"))
-            )
-        elif m.group("ts") is not None:
-            # epoch millis or a quoted ISO datetime (naive = UTC) —
-            # the same literal grammar _register_time_travel accepts
-            t = LakeSoulTable.for_path_snapshot(
-                spark, t.path,
-                end_ts_ms=_parse_ts_literal(m.group("ts").strip("'")),
-            )
-        fields, ambiguous, case_sensitive = self._schema_index(spark, t)
-        # resolve the snapshot ONCE per statement: every item reads the
-        # same table version, so a concurrent commit can never produce
-        # a row mixing two versions (the relational path's guarantee)
-        snap = t._provable_snapshot(m.group("where"))
-        if snap is None:
-            return None
-        sel = []
-        mm_cache: dict[str, tuple] = {}
-        prows: dict | None = None
-        for fn, col, alias in parsed:
-            if fn == "count" and col is None:
-                n = t._count_from(snap)
-                if n is None:
-                    return None
-                # Spark's analyzer rewrites count(*) to count(1) and
-                # auto-aliases it "count(1)"
-                sel.append(f"CAST({int(n)} AS BIGINT) AS "
-                           f"`{alias or 'count(1)'}`")
-                continue
-            key = col if case_sensitive else col.lower()
-            if key in ambiguous:
-                return None
-            f = fields.get(key)
-            if f is None:
-                return None
-            st = f.dataType.simpleString()
-            if fn == "cntd" and f.name not in t.info.range_partitions:
-                return None  # data-column DISTINCT needs a real scan
-            if f.name in t.info.range_partitions and fn in (
-                    "cntd", "min", "max"):
-                # desc-materialized values: the scoped snapshot's
-                # partition descs ARE the column's value set — a
-                # partition contributes while it holds >0 rows (exact
-                # under the provable-snapshot gate), so MAX(day) /
-                # COUNT(DISTINCT day) — the most common freshness
-                # probes — cost one driver-side metadata pass
-                key_fn = self._PART_VALUE_KEYS.get(st)
-                if key_fn is None:
-                    return None
-                if prows is None:
-                    prows = self._part_rows_by_desc(snap.files)
-                if prows is None:
-                    return None
-                from lakesoul_spark.io import partition as part_enc
-
-                raw = {part_enc.parse_desc(d).get(f.name)
-                       for d, n in prows.items() if n > 0} - {None}
-                try:
-                    # TYPED values: distinct desc encodings of one
-                    # typed value (imported '01' vs written '1') must
-                    # collapse exactly as the relational cast does
-                    vals = {key_fn(v) for v in raw}
-                except (TypeError, ValueError):
-                    return None  # unparseable desc value: fall back
-                if fn == "cntd":
-                    sel.append(f"CAST({len(vals)} AS BIGINT) AS "
-                               f"`{alias or f'count(DISTINCT {col})'}`")
-                    continue
-                # value renders go through a string cast (or nullif):
-                # relational MIN/MAX is nullable=True and the schema
-                # must not depend on which path answered
-                if not vals:
-                    lit = f"CAST(NULL AS {st.upper()})"
-                elif st == "date":
-                    v = (min if fn == "min" else max)(vals)
-                    lit = f"CAST('{v}' AS DATE)"
-                elif st == "string":
-                    lit = _nullable_str_lit(
-                        (min if fn == "min" else max)(vals))
-                else:
-                    v = (min if fn == "min" else max)(vals)
-                    lit = f"CAST('{int(v)}' AS {st.upper()})"
-                sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-                continue
-            if fn == "count":
-                # COUNT(col) = Σ per-file nonnull (any stats-column
-                # type; range-partition columns count via the desc)
-                n = t._count_col_from(snap, f.name)
-                if n is None:
-                    return None
-                sel.append(f"CAST({int(n)} AS BIGINT) AS "
-                           f"`{alias or f'count({col})'}`")
-                continue
-            if fn == "avg":
-                if f.name in t.info.range_partitions:
-                    # desc-derived: avg = Σ value×rows / Σ rows, exact
-                    # in Spark's double accumulation under the 2^53
-                    # Σ|value| bound (int family only — Spark coerces
-                    # other types through casts this path won't mimic)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    kf = self._PART_VALUE_KEYS.get(st)
-                    r = kf and self._part_sum_files(snap.files,
-                                                    f.name, kf)
-                    if not r or r[2] >= 2 ** 53:
-                        return None
-                    total, nonnull, _b = r
-                    lit = ("CAST(NULL AS DOUBLE)" if nonnull == 0 else
-                           f"CAST('{float(total) / nonnull!r}' "
-                           f"AS DOUBLE)")
-                    sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                    continue
-                if st.startswith("decimal("):
-                    # exact decimal AVG from the recorded exact sums +
-                    # nonnull counts (result type decimal(p+4,s+4),
-                    # HALF_UP — proof in _avg_dec_files)
-                    r = t._avg_dec_from(snap, f.name, st)
-                    if r is None:
-                        return None
-                    v, rt = r
-                    lit = (f"CAST(NULL AS {rt.upper()})" if v is None
-                           else f"CAST('{v}' AS {rt.upper()})")
-                    sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                    continue
-                r = t._avg_from(snap, f.name)
-                if r is None:
-                    return None
-                v = r[0]
-                # repr(float) is the shortest round-trip decimal and
-                # Spark's string→double cast is correctly rounded, so
-                # the literal parses back to the identical double
-                lit = ("CAST(NULL AS DOUBLE)" if v is None
-                       else f"CAST('{v!r}' AS DOUBLE)")
-                sel.append(f"{lit} AS `{alias or f'avg({col})'}`")
-                continue
-            if fn == "sum":
-                if f.name in t.info.range_partitions:
-                    # desc-derived: sum = Σ value×rows (int family;
-                    # overflow refused through the shared result-type
-                    # bound, exactly like data-column sums)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    kf = self._PART_VALUE_KEYS.get(st)
-                    r = kf and self._part_sum_files(snap.files,
-                                                    f.name, kf)
-                    rr = r and self._sum_render((r[0], r[1]), st)
-                    if not rr:
-                        return None
-                    v, rt = rr
-                    lit = (f"CAST(NULL AS {rt})" if v is None
-                           else f"CAST('{v}' AS {rt})")
-                    sel.append(f"{lit} AS `{alias or f'sum({col})'}`")
-                    continue
-                lit = self._sum_literal(t, snap, f.name, st)
-                if lit is None:
-                    return None
-                sel.append(f"{lit} AS `{alias or f'sum({col})'}`")
-                continue
-            kind = ("str" if st == "string"
-                    else "dec" if st.startswith("decimal(")
-                    else "flt" if st in ("float", "double")
-                    else None)
-            if kind is not None:
-                # exact extrema recorded by the writer from the column
-                # VALUES (footer string stats may be truncated
-                # prefixes, float footer stats may omit NaN — valid
-                # bounds, never claimed-exact extrema)
-                if col not in mm_cache:
-                    mm = t._minmax_exact_from(snap, f.name, kind)
-                    if mm is None:
-                        return None
-                    mm_cache[col] = mm
-                v = mm_cache[col][0 if fn == "min" else 1]
-                if v is None:
-                    lit = f"CAST(NULL AS {st.upper()})"
-                elif kind == "str":
-                    lit = _nullable_str_lit(v)
-                elif kind == "dec":
-                    lit = f"CAST('{v}' AS {st.upper()})"
-                else:
-                    lit = f"CAST('{_flt_sql_str(v)}' AS {st.upper()})"
-                sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-                continue
-            cname = f.name
-            if cname not in mm_cache:
-                mm = t._minmax_from(snap, cname)
-                if mm is None:
-                    return None
-                mm_cache[cname] = mm
-            v = mm_cache[cname][0 if fn == "min" else 1]
-            # every render is a STRING cast: it parses to the same
-            # typed value as the bare literal form (a typed literal IS
-            # defined as the cast of its string) and, unlike a plain
-            # literal, analyzes as nullable=True — the relational
-            # MIN/MAX schema
-            if st == "date":
-                lit = f"CAST('{v}' AS DATE)"
-            elif st == "timestamp":
-                # micros-exact: stats encode naive-UTC ISO, and the
-                # explicit Z suffix pins the cast to that instant
-                # in EVERY session timezone (a bare string would be
-                # reinterpreted in the session zone; verified incl.
-                # pre-epoch values)
-                lit = f"CAST('{v}Z' AS TIMESTAMP)"
-            elif st == "timestamp_ntz":
-                lit = f"CAST('{v}' AS TIMESTAMP_NTZ)"
-            else:  # integer family (min_max_fast's type gate)
-                lit = f"CAST('{int(v)}' AS {st.upper()})"
-            # the fallback's auto-alias lowercases the function but
-            # keeps the QUERY's casing of the argument (backticks
-            # stripped) — replicate exactly so the schema never
-            # depends on which path answered
-            sel.append(f"{lit} AS `{alias or f'{fn}({col})'}`")
-        # a projection of literals over VALUES constant-folds into a
-        # LocalRelation → LocalTableScan; collect() launches no job
-        # (a bare SELECT of literals plans Scan OneRowRelation, which
-        # DOES run one)
-        return spark.sql(
-            "SELECT " + ", ".join(sel) + " FROM VALUES (0)"
-        )
-
     @staticmethod
     def _schema_index(spark: SparkSession, t):
         """Case-folded column index shared by the metadata fast paths:
@@ -1376,34 +1131,77 @@ class Catalog:
 
     _BARE_COL_RE = re.compile(r"^`?(\w+)`?(?:\s+AS\s+(\w+))?$", re.I)
 
+    # ORDER BY key types the driver sort orders exactly as Spark does
+    # (Python compares str by codepoint == UTF-8 byte order; doubles go
+    # through _dbl_order_key; timestamps are collected as instants)
+    _ORDER_KINDS = frozenset((
+        "tinyint", "smallint", "int", "bigint", "float", "double",
+        "boolean", "string", "binary", "date", "timestamp_ntz",
+    ))
+
     def _try_metadata_group_by(self, spark: SparkSession, m,
-                               items_txt: str | None = None,
-                               group_txt: str | None = None,
-                               ) -> DataFrame | None:
-        """Resolve ``SELECT <group cols + COUNT/MIN/MAX/SUM items>
-        FROM t [WHERE partition-pred] GROUP BY <range-partition cols>``
-        from per-partition commit-log rows — the same metadata SHOW
-        PARTITIONS EXTENDED proves, shaped as a grouped result. Zero
-        scan jobs: groups are the scoped snapshot's partition descs
-        bucketed by the GROUP BY columns' parsed values, each
-        aggregate reads the group's per-file num_rows / [min,max] /
-        [sum,nonnull] entries, and the rows materialize as a
-        LocalRelation (``local_df``) with every column cast to the
-        relational result type. ``None`` — the never-wrong fallback —
-        whenever any piece is unprovable: a GROUP BY column that is
-        not a range partition (or an ordinal), an item outside the
-        provable aggregate family, a churned/CDC snapshot
-        (:meth:`LakeSoulTable._provable_snapshot` scoped by the
-        WHERE), a file missing a stat, or more groups than a
-        LocalRelation should carry. At 100 TB the per-partition
-        rollup a pipeline dashboard polls stops costing a corpus
-        scan. Reference: the PG-side per-partition stats of
+                               items_txt: str,
+                               group_txt: str | None) -> DataFrame | None:
+        """Answer ``SELECT <grouping cols + COUNT/MIN/MAX/SUM/AVG
+        items> FROM t [WHERE partition-pred] [GROUP BY <range-partition
+        cols> [HAVING …] [ORDER BY …] [LIMIT n]]`` from commit-log
+        metadata with zero scan jobs. The work splits three ways:
+
+        - metadata proves the per-group values: the scoped snapshot's
+          files are bucketed by the typed GROUP BY values (no GROUP BY:
+          one group of every scoped file, present even when the scope
+          is empty) and each aggregate reads its group's per-file
+          num_rows / stats / recorded sums through the
+          ``LakeSoulTable._*_files`` helpers;
+        - Catalyst evaluates the projection and HAVING: one carrier row
+          per group (``local_df``, a LocalRelation) holds every grouping
+          column and one ``__aN`` column per aggregate call in the
+          relational result type, and the HAVING / ORDER BY text runs
+          over it with those calls rewritten to carrier columns — so
+          Spark's own coercions, arithmetic and errors apply;
+        - the driver sorts: the ORDER BY keys are collected (zero jobs,
+          where a Sort would launch some), the group rows are ordered
+          with Spark's NULLS defaults and NaN above everything, LIMIT
+          cuts them, and the carrier is re-emitted in that order.
+
+        ``None`` — the never-wrong fallback to a scan — whenever any
+        piece is unprovable: a GROUP BY column that is not a range
+        partition, an item outside the provable aggregate family, a
+        churned/CDC snapshot (:meth:`LakeSoulTable._provable_snapshot`
+        scoped by the WHERE), a file missing a stat, more groups than
+        a LocalRelation should carry, a tail the carrier cannot resolve
+        exactly like the relational plan, or a shape Spark's analyzer
+        rejects. Output names and nullability match the relational
+        plan's. Reference: the PG-side per-partition stats of
         PartitionInfo + CompactBucketIO.java:220-258."""
+        from pyspark.errors import PySparkException
+
         from lakesoul_spark.functions.local_df import (
             MAX_LOCAL_ROWS, local_df,
         )
         from lakesoul_spark.io import partition as part_enc
 
+        hav, oby = m.group("hav"), m.group("oby")
+        tails = " ".join(filter(None, (hav, oby)))
+        # tails run as Spark expressions over the carrier; refuse what
+        # could resolve there differently from the relational plan:
+        # escapes and backticks (the quote scan below stays simple), a
+        # subquery (its aggregates are not this table's), and names
+        # starting with '__' (the carrier's own columns)
+        if re.search(r"[`\\]", tails) or re.search(
+                r"\bSELECT\b|(?<!\w)__", _blank_quoted(tails), re.I):
+            return None
+        # SELECT items: aggregate calls [AS alias] or bare columns,
+        # checked before any table lookup so other shapes cost nothing
+        items = []
+        for it in _split_top(items_txt):
+            cm = self._AGG_CALL_RE.match(it)
+            alias = cm and re.fullmatch(r"(?:\s+AS\s+(\w+))?",
+                                        it[cm.end():], re.I)
+            bm = None if alias else self._BARE_COL_RE.match(it)
+            if not (alias or bm and group_txt):
+                return None  # a bare item needs a GROUP BY
+            items.append((cm, alias, bm))
         ns, name = self._split_name(m.group("tbl"))
         if not self.table_exists(name, ns):
             return None
@@ -1421,1257 +1219,367 @@ class Catalog:
             )
         info = t.info
         fields, ambiguous, case_sensitive = self._schema_index(spark, t)
-        rset = {c if case_sensitive else c.lower(): c
-                for c in info.range_partitions}
 
-        def _range_col(txt: str) -> str | None:
-            key = txt if case_sensitive else txt.lower()
-            if key in ambiguous:
-                return None
-            return rset.get(key)
+        def fold(s: str) -> str:
+            return s if case_sensitive else s.lower()
+
+        rset = {fold(c): c for c in info.range_partitions}
+
+        def range_col(txt: str) -> str | None:
+            return None if fold(txt) in ambiguous else rset.get(fold(txt))
 
         gcols: list[str] = []
-        for g in (s.strip() for s in (group_txt or m.group("gby")).split(",")):
+        for g in _split_top(group_txt) if group_txt else []:
             gm = self._BARE_COL_RE.match(g)
-            if gm is None or gm.group(2) or gm.group(1).isdigit():
+            if gm is None or gm.group(2):
                 return None  # ordinals/expressions: not representable
-            rc = _range_col(gm.group(1))
-            if rc is None or rc in gcols:
+            rc = range_col(gm.group(1))
+            if rc is None or rc in gcols or rc.startswith("__"):
                 return None  # non-partition or duplicate group col
-            st = fields[rc if case_sensitive
-                        else rc.lower()].dataType.simpleString()
-            if self._PART_VALUE_KEYS.get(st) is None:
+            if self._PART_VALUE_KEYS.get(
+                    fields[fold(rc)].dataType.simpleString()) is None:
                 return None  # no canonical typed form: fall back
             gcols.append(rc)
 
-        # (kind, ...) per SELECT item, in order
-        parsed: list[tuple] = []
-        for it in (s.strip() for s in (items_txt or m.group("items")).split(",")):
-            im = self._META_AGG_RE.match(it)
-            if im is not None:
-                if im.group(5):
-                    parsed.append(("agg", "cntd", im.group(5),
-                                   im.group(6)))
-                elif im.group(2):
-                    parsed.append(("agg", im.group(2).lower(),
-                                   im.group(3), im.group(4)))
-                else:
-                    parsed.append(("agg", "count", None, im.group(1)))
+        calls: list[tuple] = []  # (fn, column as written) per __aN
+
+        def slot(cm) -> str:
+            """Carrier column of one aggregate call; one per distinct
+            (fn, column), so a call repeated in HAVING / ORDER BY reads
+            the value its SELECT item carries."""
+            fn, col = self._agg_call(cm)
+            key = (fn, col and fold(col))
+            for i, (f2, c2) in enumerate(calls):
+                if (f2, c2 and fold(c2)) == key:
+                    return f"__a{i}"
+            calls.append((fn, col))
+            return f"__a{len(calls) - 1}"
+
+        # (carrier column, output name, is a count, explicit alias)
+        outs: list[tuple] = []
+        for cm, alias, bm in items:
+            if alias:
+                fn, col = self._agg_call(cm)
+                # the relational auto-alias: count(1), else the function
+                # lowercased with the argument in the QUERY's casing
+                out = alias.group(1) or (
+                    "count(1)" if col is None
+                    else f"count(DISTINCT {col})" if fn == "cntd"
+                    else f"{fn}({col})")
+                outs.append((slot(cm), out, fn in ("count", "cntd"),
+                             alias.group(1)))
                 continue
-            cm = self._BARE_COL_RE.match(it)
-            if cm is None or cm.group(1).isdigit():
-                return None
-            rc = _range_col(cm.group(1))
+            rc = range_col(bm.group(1))
             if rc is None or rc not in gcols:
                 return None  # a bare item must be a grouping column
-            # a bare reference keeps the QUERY's casing as its output
-            # name (Spark resolves but does not re-case it)
-            parsed.append(("group", rc, cm.group(2) or cm.group(1)))
+            # a bare reference keeps the QUERY's casing as its name
+            outs.append((rc, bm.group(2) or bm.group(1), False,
+                         bm.group(2)))
+        visible = {o[0] for o in outs}
+        hidden_groups = {fold(c) for c in gcols if c not in visible}
 
-        # HAVING / aggregate ORDER BY items resolve against grouping
-        # columns, output aliases, and aggregate expressions — hidden
-        # items are APPENDED to ``parsed`` (Spark computes an
-        # unselected HAVING/ORDER BY aggregate the same way) and ride
-        # the ordinary spec machinery below, so every provability gate
-        # applies to them too; the final projection drops them.
-        n_visible = len(parsed)
-        hav_ast = None
-        if m.group("hav") is not None:
-            hav_ast = self._parse_having_text(
-                m.group("hav"), parsed, gcols, case_sensitive, rset,
-                ambiguous)
-            if hav_ast is None:
-                return None
-        # hidden-item boundary: HAVING operands outside the SELECT
-        # (aggregates OR unselected grouping columns) were appended
-        # past n_visible by the parse above. An ("expr", …) item whose
-        # leaves all resolved to SELECTED items does NOT count —
-        # measured (r15): Spark resolves HAVING arithmetic over
-        # selected aggregates fine even combined with aggregate ORDER
-        # BY items; only a hidden LEAF (an unselected aggregate or
-        # grouping column) trips the analyzer rejection below
-        hav_hidden = any(p[0] != "expr" for p in parsed[n_visible:])
-        oby_txt = m.group("oby")
-        order_extra: dict[str, int] = {}
-        if oby_txt is not None:
-            oby_txt = self._rewrite_order_aggs(
-                oby_txt, parsed, gcols, case_sensitive, rset,
-                ambiguous, order_extra, n_visible=n_visible)
-            if oby_txt is None:
-                return None
-            if hav_hidden and order_extra:
-                # ERROR PARITY (measured on Spark 4.1, r14): the
-                # analyzer rejects a HAVING that resolved to ANY
-                # hidden item (an unselected aggregate or grouping
-                # column) combined with ANY aggregate-expression
-                # ORDER BY item — even one the SELECT carries
-                # (UNSUPPORTED_EXPR_FOR_OPERATOR) — the hidden having
-                # column breaks sort-aggregate resolution. A HAVING
-                # over selected outputs with hidden sort aggregates
-                # resolves fine (and is answered below), as does a
-                # hidden HAVING with alias/plain ORDER BY items —
-                # never answer the one combination Spark errors on
-                return None
+        def rewrite(text: str) -> tuple:
+            """``(text with each aggregate call outside quotes replaced
+            by its carrier column, True when it reads an item the
+            SELECT does not carry)``."""
+            blank = _blank_quoted(text)
+            parts, pos, hidden = [], 0, False
+            for cm in self._AGG_CALL_RE.finditer(blank):
+                c = slot(cm)
+                hidden = hidden or c not in visible
+                parts += [text[pos:cm.start()], f"`{c}`"]
+                pos = cm.end()
+            rest = self._AGG_CALL_RE.sub(" ", blank)
+            hidden = hidden or any(
+                fold(w) in hidden_groups for w in re.findall(
+                    r"(?<![\w.])([A-Za-z_]\w*)\b(?!\s*\()", rest))
+            return "".join(parts) + text[pos:], hidden
+
+        hav_sql, hav_hidden = rewrite(hav) if hav is not None \
+            else (None, False)
+        sort: list[tuple] = []  # (key expression, desc, nulls_first)
+        agg_sort = False
+        for item in _split_top(oby) if oby is not None else []:
+            om = re.fullmatch(r"(.+?)(\s+(?:ASC|DESC))?"
+                              r"(\s+NULLS\s+(FIRST|LAST))?", item,
+                              re.I | re.S)
+            body = om.group(1).strip()
+            if re.fullmatch(r"[+-]?\d+", body):
+                return None  # an ordinal names an output position
+            expr, hidden = rewrite(body)
+            if not re.fullmatch(r"\w+", body):
+                agg_sort = True
+                if hidden and not self._AGG_CALL_RE.fullmatch(body):
+                    # Spark resolves a sort EXPRESSION only over the
+                    # SELECT outputs (measured on 4.1): a hidden leaf is
+                    # its analyzer error, which the fallback reproduces
+                    return None
+            desc = (om.group(2) or "").strip().upper() == "DESC"
+            nulls_first = (not desc if om.group(4) is None
+                           else om.group(4).upper() == "FIRST")
+            sort.append((expr, desc, nulls_first))
+        if hav_hidden and agg_sort:
+            # Spark's analyzer rejects a HAVING over a hidden item (an
+            # unselected aggregate or grouping column) combined with
+            # any aggregate ORDER BY item, selected or not (measured on
+            # 4.1: UNSUPPORTED_EXPR_FOR_OPERATOR) — never answer it
+            return None
+        # HAVING / ORDER BY may name SELECT aliases: the carrier gets a
+        # copy of each aliased column, unless the alias could shadow a
+        # table column (Spark's resolution order there is not copied)
+        aliases: list[tuple] = []
+        if tails:
+            seen: set = set()
+            for src, _out, _n, alias in outs:
+                if alias is None or fold(alias) == fold(src):
+                    continue
+                if (fold(alias) in fields or fold(alias) in seen
+                        or alias.startswith("__")):
+                    return None
+                seen.add(fold(alias))
+                aliases.append((alias, src))
 
         snap = t._provable_snapshot(m.group("where"))
         if snap is None:
             return None
-        # every per-item gate resolves ONCE here — the per-group value
-        # functions below touch only the group's file list (no
-        # table_info re-reads inside the group loop; this path's whole
-        # point is one driver-side metadata pass)
         defaults = info.column_defaults()
         range_set = set(info.range_partitions)
 
-        # bucket by the TYPED value, not the raw desc string: two
-        # encodings of one typed value (e.g. 'p=01' from an imported
-        # hive layout and 'p=1' from this writer, both int 1) must land
-        # in ONE group, exactly as the relational cast merges them
-        gconv = [self._PART_VALUE_KEYS[
-            fields[c if case_sensitive
-                   else c.lower()].dataType.simpleString()]
-            for c in gcols]
-        groups: dict[tuple, list] = {}
-        for f in snap.files:
-            vals = part_enc.parse_desc(f.partition_desc)
-            try:
-                key = tuple(
-                    None if vals.get(c) is None else conv(vals.get(c))
-                    for c, conv in zip(gcols, gconv))
-            except (TypeError, ValueError):
-                return None  # unparseable desc value: fall back
-            groups.setdefault(key, []).append(f)
-        # relational GROUP BY emits a group only where ≥1 live row
-        # exists: a zero-row desc (all rows deleted, an empty write)
-        # must not fabricate one, and a file that predates num_rows
-        # recording can prove neither way — refuse the statement
-        for key in list(groups):
-            n = 0
-            for f in groups[key]:
-                if f.num_rows < 0:
-                    return None
-                n += f.num_rows
-            if n == 0:
-                del groups[key]
-        if len(groups) > MAX_LOCAL_ROWS:
-            return None  # past the LocalRelation budget a scan is fine
-
-        # column spec per item: carrier DDL type for local_df, a final
-        # cast (None = carrier already IS the result type), the output
-        # name, and a per-group value function
-        specs: list[tuple] = []
-        for idx, p in enumerate(parsed):
-            cname = f"c{idx}"
-            if p[0] == "group":
-                _, rc, out = p
-                st = fields[rc if case_sensitive
-                            else rc.lower()].dataType.simpleString()
-                gi = gcols.index(rc)
-                specs.append((cname, "string", st, out,
-                              lambda key, gf, gi=gi:
-                              None if key[gi] is None else str(key[gi])))
-                continue
-            if p[0] == "expr":
-                # hidden arithmetic over earlier operands (their spec
-                # entries already exist — leaves resolve before the
-                # expr item is appended)
-                es = self._expr_spec(p[1], specs)
-                if es is None:
-                    return None
-                carrier, cast_to, efv = es
-                specs.append((cname, carrier, cast_to, p[3], efv))
-                continue
-            _, fn, col, alias = p
-            if fn == "count" and col is None:
-                def _cnt(key, gf):
-                    n = LakeSoulTable._count_files(gf)
-                    # COUNT is never NULL relationally: an unprovable
-                    # group refuses the whole statement, never guesses
-                    return _REFUSE if n is None else int(n)
-                specs.append((cname, "bigint", None,
-                              alias or "count(1)", _cnt))
-                continue
-            f = fields.get(col if case_sensitive else col.lower())
-            if f is None or (col if case_sensitive
-                             else col.lower()) in ambiguous:
+        def agg_spec(fn: str, col: str | None):
+            """``(carrier type, decimal result type or None, value fn)``
+            for one aggregate call — the value fn maps a group's live
+            files to its value (``None`` = SQL NULL, ``_REFUSE`` =
+            unprovable) — or ``None`` outside the provable family."""
+            if col is None:  # COUNT(*)
+                return "bigint", None, lambda gf: _proven(
+                    LakeSoulTable._count_files(gf))
+            f = fields.get(fold(col))
+            if f is None or fold(col) in ambiguous:
                 return None
-            st = f.dataType.simpleString()
-            out = alias or f"{fn}({col})"
-            has_default = defaults.get(f.name) is not None
-            if fn == "cntd" and f.name not in range_set:
-                return None  # data-column DISTINCT needs a real scan
-            if f.name in range_set and fn in ("cntd", "min", "max"):
-                # desc-materialized values per group (a group keyed by
-                # a SUBSET of the partition columns may span descs)
-                pk_fn = self._PART_VALUE_KEYS.get(st)
-                if pk_fn is None:
+            c, st = f.name, f.dataType.simpleString()
+            if c in range_set:
+                # the desc IS the value: a partition contributes while
+                # it holds live rows (exact under the provable gate)
+                if fn == "count":
+                    return "bigint", None, lambda gf: _proven(
+                        LakeSoulTable._count_part_files(gf, c))
+                kf = self._PART_VALUE_KEYS.get(st)
+                if kf is None:
                     return None
-                if fn == "cntd":
-                    out = alias or f"count(DISTINCT {col})"
-
-                def _pvals(gf, _c=f.name, _k=pk_fn):
-                    prows = self._part_rows_by_desc(gf)
-                    if prows is None:
-                        return None
-                    raw = {part_enc.parse_desc(d).get(_c)
-                           for d, n in prows.items() if n > 0} - {None}
-                    try:
-                        # typed: duplicate desc encodings collapse
-                        return {_k(v) for v in raw}
-                    except (TypeError, ValueError):
-                        return None
-
-                if fn == "cntd":
-                    def _cd(key, gf, _pv=_pvals):
-                        vals = _pv(gf)
-                        return _REFUSE if vals is None else len(vals)
-                    specs.append((cname, "bigint", None, out, _cd))
-                    continue
-
-                def _mmd(key, gf, _fn=fn, _pv=_pvals):
-                    vals = _pv(gf)
-                    if vals is None:
-                        return _REFUSE
-                    if not vals:
-                        return None  # no live rows in scope: SQL NULL
-                    return str((min if _fn == "min" else max)(vals))
-                specs.append((cname, "string", st, out, _mmd))
-                continue
-            if fn == "count":
-                # COUNT(col): per-file nonnull counts; range-partition
-                # columns count via the group's descs (non-sentinel
-                # partitions contribute num_rows)
-                if f.name in range_set:
-                    def _cntp(key, gf, _c=f.name):
-                        total = 0
-                        for ff in gf:
-                            if ff.num_rows < 0:
-                                return _REFUSE
-                            v = part_enc.parse_desc(
-                                ff.partition_desc).get(_c)
-                            total += ff.num_rows if v is not None else 0
-                        return total
-                    specs.append((cname, "bigint", None, out, _cntp))
-                    continue
-
-                def _cntc(key, gf, _c=f.name, _d=has_default):
-                    n = LakeSoulTable._count_col_files(gf, _c, _d)
-                    return _REFUSE if n is None else int(n)
-                specs.append((cname, "bigint", None, out, _cntc))
-                continue
-            if fn == "avg":
-                if f.name in range_set:
-                    # desc-derived per group: Σ value×rows / Σ rows,
-                    # exact under the 2^53 Σ|value| bound (int family)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    pk_fn2 = self._PART_VALUE_KEYS.get(st)
-                    if pk_fn2 is None:
-                        return None
-
-                    def _avgp(key, gf, _c=f.name, _k=pk_fn2):
-                        r = self._part_sum_files(gf, _c, _k)
-                        if r is None or r[2] >= 2 ** 53:
+                if fn in ("cntd", "min", "max"):
+                    def part_values(gf):
+                        rows = self._part_rows_by_desc(gf)
+                        if rows is None:
                             return _REFUSE
-                        total, nonnull, _b = r
-                        if nonnull == 0:
-                            return None  # all rows NULL: SQL NULL
-                        return repr(float(total) / nonnull)
-                    specs.append((cname, "string", "double", out,
-                                  _avgp))
-                    continue
-                if st.startswith("decimal("):
-                    # exact per-group decimal AVG (result type
-                    # decimal(p+4,s+4) HALF_UP; proof in
-                    # _avg_dec_files); the p≤34 type gate is
-                    # group-independent — check it once here
-                    if int(st[len("decimal("):-1].split(",")[0]) > 34:
-                        return None
-                    drt = Catalog._avg_dec_result_type(st)
-
-                    def _avgd(key, gf, _c=f.name, _d=has_default,
-                              _st=st):
-                        r = LakeSoulTable._avg_dec_files(
-                            gf, _c, _d, _st)
-                        if r is None:
+                        raw = {part_enc.parse_desc(d).get(c)
+                               for d, n in rows.items() if n > 0} - {None}
+                        try:
+                            # typed: duplicate encodings collapse
+                            vals = {kf(v) for v in raw}
+                        except (TypeError, ValueError):
                             return _REFUSE
-                        return r[0]
-                    specs.append((cname, "string", drt, out, _avgd))
-                    continue
-                # integer family, with the per-group 2^53
-                # double-accumulation proof (see _avg_files)
+                        if fn == "cntd":
+                            return len(vals)
+                        if not vals:
+                            return None  # no live rows in scope
+                        return (min if fn == "min" else max)(vals)
+
+                    return ("bigint" if fn == "cntd" else st), None, \
+                        part_values
                 if st not in LakeSoulTable._SUM_EXACT_TYPES:
                     return None
 
-                def _avg(key, gf, _c=f.name, _d=has_default):
-                    r = LakeSoulTable._avg_files(gf, _c, _d)
-                    if r is None:
+                def part_sum(gf):
+                    r = self._part_sum_files(gf, c, kf)
+                    if fn == "sum":
+                        return self._sum_value(r and r[:2], st)
+                    # exact in Spark's double accumulation while
+                    # Σ|value| stays under 2^53
+                    if r is None or r[2] >= 2 ** 53:
                         return _REFUSE
-                    # repr round-trips through the string→double cast
-                    return None if r[0] is None else repr(r[0])
-                specs.append((cname, "string", "double", out, _avg))
-                continue
-            if fn == "sum":
-                if f.name in range_set:
-                    # desc-derived per group: Σ value×rows (int
-                    # family; shared overflow bound via _sum_render)
-                    if st not in LakeSoulTable._SUM_EXACT_TYPES:
-                        return None
-                    pk_fn2 = self._PART_VALUE_KEYS.get(st)
-                    if pk_fn2 is None:
-                        return None
+                    return None if r[1] == 0 else float(r[0]) / r[1]
 
-                    def _sump(key, gf, _c=f.name, _k=pk_fn2):
-                        r = self._part_sum_files(gf, _c, _k)
-                        rr = r and self._sum_render((r[0], r[1]),
-                                                    "bigint")
-                        if not rr:
-                            return _REFUSE
-                        return rr[0]
-                    specs.append((cname, "string",
-                                  self._sum_result_type(st), out,
-                                  _sump))
-                    continue
+                return ("double" if fn == "avg" else "bigint"), None, \
+                    part_sum
+            has_default = defaults.get(c) is not None
+            if fn == "cntd":
+                return None  # data-column DISTINCT needs a real scan
+            if fn == "count":
+                return "bigint", None, lambda gf: _proven(
+                    LakeSoulTable._count_col_files(gf, c, has_default))
+            if fn == "sum":
                 if not (st in LakeSoulTable._SUM_EXACT_TYPES
                         or st.startswith("decimal(")):
                     return None
                 rt = self._sum_result_type(st)
 
-                def _sum(key, gf, _c=f.name, _st=st, _d=has_default):
-                    res = LakeSoulTable._sum_files(gf, _c, _d)
-                    if res is None:
-                        return _REFUSE
-                    r = self._sum_render(res, _st)
-                    return _REFUSE if r is None else r[0]
-                specs.append((cname, "string", rt, out, _sum))
-                continue
-            mm_kind = ("str" if st == "string"
-                       else "dec" if st.startswith("decimal(")
-                       else "flt" if st in ("float", "double")
-                       else None)
-            if mm_kind is not None and fn in ("min", "max"):
-                # exact extrema recorded by the writer from the
-                # column VALUES (footer string stats may be truncated
-                # prefixes, float footer stats may omit NaN — valid
-                # bounds, never claimed extrema)
-                def _mms(key, gf, _c=f.name, _fn=fn, _d=has_default,
-                         _k=mm_kind):
+                def total(gf):
+                    return self._sum_value(
+                        LakeSoulTable._sum_files(gf, c, has_default), st)
+
+                return ("bigint", None, total) if rt == "bigint" \
+                    else ("string", rt, total)
+            if fn == "avg":
+                if st.startswith("decimal("):
+                    # exact decimal AVG, result decimal(p+4,s+4) HALF_UP
+                    # (proof in _avg_dec_files); p+4 > 38 refuses
+                    if int(st[len("decimal("):-1].split(",")[0]) > 34:
+                        return None
+                    return "string", self._avg_dec_result_type(st), \
+                        lambda gf: _proven(LakeSoulTable._avg_dec_files(
+                            gf, c, has_default, st), 0)
+                if st not in LakeSoulTable._SUM_EXACT_TYPES:
+                    return None
+                return "double", None, lambda gf: _proven(
+                    LakeSoulTable._avg_files(gf, c, has_default), 0)
+            i = 0 if fn == "min" else 1
+            kind = ("str" if st == "string"
+                    else "dec" if st.startswith("decimal(")
+                    else "flt" if st in ("float", "double") else None)
+            if kind is not None:
+                # exact extrema the writer recorded from the column
+                # VALUES (footer string stats may be truncated prefixes
+                # and float footer stats may omit NaN)
+                def exact(gf):
                     mm = LakeSoulTable._minmax_exact_files(
-                        gf, _c, _d, _k)
+                        gf, c, has_default, kind)
                     if mm is None:
                         return _REFUSE
-                    v = mm[0 if _fn == "min" else 1]
-                    if v is None:
-                        return None  # provably all-null: SQL NULL
-                    if _k == "flt":
-                        return _flt_sql_str(v)
-                    return str(v) if _k == "dec" else v
-                specs.append((
-                    cname, "string",
-                    None if mm_kind == "str" else st, out, _mms))
-                continue
-            # min/max: exact-stats types only
+                    v = mm[i]
+                    return str(v) if kind == "dec" and v is not None \
+                        else v
+
+                return ("string", st, exact) if kind == "dec" \
+                    else (st, None, exact)
             if st not in LakeSoulTable._MINMAX_EXACT_TYPES:
                 return None
 
-            def _mm(key, gf, _c=f.name, _fn=fn,
-                    _z=(st == "timestamp")):
-                mm = LakeSoulTable._minmax_files(gf, _c)
+            def stat(gf):
+                mm = LakeSoulTable._minmax_files(gf, c)
                 if mm is None:
                     return _REFUSE
-                v = str(mm[0 if _fn == "min" else 1])
-                # naive-UTC ISO carrier + Z suffix: the string→
-                # timestamp cast honors the zone, so the instant is
-                # session-timezone-independent
-                return v + "Z" if _z else v
-            specs.append((cname, "string", st, out, _mm))
+                v = mm[i]
+                # naive-UTC ISO stats + Z suffix: the string→timestamp
+                # cast pins the instant in every session timezone
+                return v + "Z" if st == "timestamp" and v is not None \
+                    else v
 
-        order_spec = None
-        if oby_txt:
-            order_spec = self._parse_order_by(
-                oby_txt, specs, case_sensitive, extra=order_extra)
-            if order_spec is None:
-                return None  # unrepresentable ORDER BY: fall back
-        hav_pred = None
-        if hav_ast is not None:
-            hav_pred = self._hav_predicate(hav_ast, specs)
-            if hav_pred is None:
-                return None  # no provable comparison domain: fall back
+            return st, None, stat
+
+        specs = []
+        for fn, col in calls:
+            sp = agg_spec(fn, col)
+            if sp is None:
+                return None
+            specs.append(sp)
+
+        # bucket by the TYPED value, not the raw desc string: two
+        # encodings of one typed value (e.g. 'p=01' from an imported
+        # hive layout and 'p=1' from this writer, both int 1) must land
+        # in ONE group, exactly as the relational cast merges them
+        gtypes = [fields[fold(c)].dataType.simpleString() for c in gcols]
+        groups: dict[tuple, list] = {(): snap.files}
+        if gcols:
+            groups = {}
+            for f in snap.files:
+                vals = part_enc.parse_desc(f.partition_desc)
+                try:
+                    key = tuple(
+                        None if vals.get(c) is None
+                        else self._PART_VALUE_KEYS[st](vals.get(c))
+                        for c, st in zip(gcols, gtypes))
+                except (TypeError, ValueError):
+                    return None  # unparseable desc value: fall back
+                groups.setdefault(key, []).append(f)
+            for key in list(groups):
+                # relational GROUP BY emits a group only where ≥1 live
+                # row exists; a file that predates num_rows recording
+                # can prove neither way — refuse the statement
+                n = LakeSoulTable._count_files(groups[key])
+                if n is None:
+                    return None
+                if n == 0:
+                    del groups[key]
+        if len(groups) > MAX_LOCAL_ROWS:
+            return None  # past the LocalRelation budget a scan is fine
 
         rows = []
-        for key in sorted(groups,
-                          key=lambda k: tuple((v is None, str(v))
-                                              for v in k)):
-            gf = groups[key]
-            row = []
-            for _, _, _, _, fv in specs:
-                v = (fv(key, gf, row)
-                     if getattr(fv, "_needs_row", False)
-                     else fv(key, gf))
+        for idx, key in enumerate(sorted(
+                groups, key=lambda k: tuple((v is None, str(v))
+                                            for v in k))):
+            row = [idx, *key]
+            for _carrier, _cast, fv in specs:
+                v = fv(groups[key])
                 if v is _REFUSE:
                     return None
                 row.append(v)
-            rows.append(tuple(row))
+            rows.append(row)
 
-        if hav_pred is not None:
-            # SQL filter semantics: a group survives only on TRUE
-            # (Kleene 3-valued — NULL comparisons drop the row), and
-            # HAVING applies BEFORE ORDER BY / LIMIT
-            rows = [r for r in rows if hav_pred(r) is True]
+        cols = [("__row", "int", None)] + [
+            (c, st, None) for c, st in zip(gcols, gtypes)] + [
+            (f"__a{i}", carrier, cast)
+            for i, (carrier, cast, _fv) in enumerate(specs)]
+        ddl = ", ".join(f"`{c}` {carrier}" for c, carrier, _ in cols)
 
-        if order_spec is not None:
-            # typed driver-side ORDER BY over the (≤MAX_LOCAL_ROWS)
-            # group rows: layered stable sorts, last item first
-            for idx, key_fn, desc, nulls_first in reversed(order_spec):
-                nb = (1 if nulls_first else 0) if desc \
-                    else (0 if nulls_first else 1)
+        def carrier(rows):
+            # alias copies in a second select, so they read the CAST
+            # column (a decimal), not the string the carrier ships
+            return local_df(spark, rows, ddl).select(
+                *[F.col(f"`{c}`").cast(cast).alias(c) if cast
+                  else F.col(f"`{c}`") for c, _, cast in cols]).select(
+                "*", *[F.col(f"`{src}`").alias(a) for a, src in aliases])
 
-                def level_key(r, _i=idx, _k=key_fn, _nb=nb):
-                    v = _k(r[_i])
-                    if v is None:
-                        return (_nb, 0)
-                    return (1 - _nb, v)
-                try:
-                    rows.sort(key=level_key, reverse=desc)
-                except TypeError:
-                    return None  # unorderable carrier: fall back
-        if m.group("lim") is not None:
-            # LIMIT without ORDER BY keeps the deterministic group
-            # order — any n rows are a valid relational answer
-            rows = rows[:int(m.group("lim"))]
-
-        pdf = local_df(
-            spark, rows,
-            ", ".join(f"`{c}` {carrier}" for c, carrier, *_ in specs),
-        )
-        sel = []
-        for c, carrier, cast_to, out, _fv in specs[:n_visible]:
-            e = F.col(f"`{c}`")
-            if cast_to is not None:
-                e = e.cast(cast_to)
-            if carrier != "bigint":
-                # group keys and MIN/MAX/SUM/AVG are nullable=True in
-                # the relational plan (parquet scan columns and
-                # aggregates over them); the LocalRelation carrier may
-                # analyze non-nullable when no group happens to hold a
-                # NULL, so add nullability with an identity nullif
-                # (still collapses to LocalTableScan).
-                e = F.nullif(e, F.lit(None))
-            else:
-                # COUNT rides the bigint carrier and is non-nullable
-                # relationally; a ZERO-group result materializes as an
-                # empty LocalRelation whose columns analyze nullable —
-                # coalesce is a no-op on values (COUNT is never NULL)
-                # that pins the schema to the relational one
-                e = F.coalesce(e, F.lit(0).cast("bigint"))
-            sel.append(e.alias(out))
-        return pdf.select(*sel)
-
-    _ORDER_ITEM_RE = re.compile(
-        r"^`?(\w+)`?(?:\s+(ASC|DESC))?(?:\s+NULLS\s+(FIRST|LAST))?$",
-        re.I,
-    )
-    # carrier-string → typed python sort key per result type family;
-    # ISO date/timestamp strings and UTF-8 strings already sort in
-    # value order (python str compares by codepoint == UTF-8 bytes)
-    _ORDER_KEY_CASTS = {
-        "tinyint": int, "smallint": int, "int": int, "integer": int,
-        "bigint": int, "long": int,
-        "date": str, "timestamp": str, "timestamp_ntz": str,
-        "string": str, "double": _dbl_order_key,
-        "float": _dbl_order_key,
-    }
-
-    @classmethod
-    def _parse_order_by(cls, text: str, specs, case_sensitive,
-                        extra: dict | None = None):
-        """ORDER BY items resolved against the SELECT output columns →
-        ``[(row_index, key_fn, desc, nulls_first)]``, or ``None`` for
-        anything not exactly representable (expressions, ordinals,
-        non-output columns, unorderable types) — the caller falls back
-        to the relational path. Spark defaults: ASC + NULLS FIRST;
-        DESC + NULLS LAST. ``extra`` maps placeholder names (from
-        :meth:`_rewrite_order_aggs` — aggregate items resolved to
-        possibly-hidden spec indexes) straight to spec positions."""
-        import decimal
-
-        by_name = {}
-        for i, (cname, carrier, cast_to, out, _fv) in enumerate(specs):
-            if out.startswith("__"):
-                # hidden machinery items (__havN/__hxN): reachable
-                # only via ``extra`` placeholders — a user-written
-                # ORDER BY naming one is an unresolved column in the
-                # relational plan and must refuse, never resolve here
-                continue
-            key = out if case_sensitive else out.lower()
-            if key in by_name:
-                by_name[key] = None  # ambiguous output name: refuse
-            else:
-                by_name[key] = (i, carrier, cast_to)
-        out_spec = []
-        for item in (s.strip() for s in text.split(",")):
-            im = cls._ORDER_ITEM_RE.match(item)
-            if im is None or im.group(1).isdigit():
-                return None
-            if extra and im.group(1) in extra:
-                i2 = extra[im.group(1)]
-                hit = (i2, specs[i2][1], specs[i2][2])
-            else:
-                ref = (im.group(1) if case_sensitive
-                       else im.group(1).lower())
-                hit = by_name.get(ref)
-            if hit is None:
-                return None
-            i, carrier, cast_to = hit
-            rt = (cast_to or carrier).lower()
-            if rt.startswith("decimal("):
-                def key_fn(v):
-                    return None if v is None else decimal.Decimal(str(v))
-            else:
-                conv = cls._ORDER_KEY_CASTS.get(rt)
-                if conv is None:
-                    return None
-                def key_fn(v, _c=conv):
-                    return None if v is None else _c(v)
-            desc = (im.group(2) or "").upper() == "DESC"
-            nf = im.group(3)
-            nulls_first = (not desc) if nf is None \
-                else nf.upper() == "FIRST"
-            out_spec.append((i, key_fn, desc, nulls_first))
-        return out_spec or None
-
-    # ------------------------------------------------- HAVING tails
-    # (r13) HAVING on the GROUP BY fast path: atoms are
-    # <operand> <cmp> <literal> / <operand> IS [NOT] NULL — plus
-    # (r14) <operand> [NOT] BETWEEN <lit> AND <lit> and <operand>
-    # [NOT] IN (<lit>, …), both desugared onto the cmp machinery —
-    # composed with AND/OR/NOT and parentheses; operands are grouping
-    # columns, output aliases, or aggregate expressions of the
-    # provable family (Spark resolves ALL of these — measured —
-    # computing unselected aggregates as hidden columns, which is
-    # exactly what the hidden ``parsed`` items replicate). Anything
-    # else refuses → relational.
-
-    _HAV_LIT_INT = re.compile(r"^[+-]?\d+$")
-    _HAV_LIT_DEC = re.compile(r"^[+-]?(\d+\.\d*|\.\d+)$")
-    _HAV_LIT_DBL = re.compile(
-        r"^[+-]?(\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+[dD]?|[dD])$")
-    _HAV_LIT_STR = re.compile(r"^'([^'\\]*)'$", re.S)
-    _HAV_CMP_RE = re.compile(
-        r"^(?P<lhs>.+?)\s*(?P<op><=|>=|<>|!=|==|=|<|>)\s*(?P<lit>.+)$",
-        re.S)
-    _HAV_NULL_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+IS\s+(?P<neg>NOT\s+)?NULL$", re.I | re.S)
-    # r14: BETWEEN / IN-list atoms — desugared onto the cmp machinery
-    _HAV_BETWEEN_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+(?P<neg>NOT\s+)?BETWEEN\s+(?P<lo>.+?)"
-        r"\s+AND\s+(?P<hi>.+)$", re.I | re.S)
-    _HAV_IN_RE = re.compile(
-        r"^(?P<lhs>.+?)\s+(?P<neg>NOT\s+)?IN\s*\((?P<list>.*)\)$",
-        re.I | re.S)
-
-    _HAV_LIT_DATE = re.compile(r"^DATE\s+'(\d{4}-\d{2}-\d{2})'$",
-                               re.I)
-
-    @classmethod
-    def _hav_literal(cls, lit: str):
-        """``(kind, value)`` of one comparison literal — exact
-        (int/bare-fractional, Spark parses those as DECIMALS),
-        double (scientific / D-suffixed), date (``DATE '…'`` in the
-        strict zero-padded ISO form — looser spellings refuse to the
-        fallback, which applies Spark's own cast), or str — ``None``
-        outside the grammar (escapes, column references)."""
-        lit = lit.strip()
-        if cls._HAV_LIT_INT.match(lit) or cls._HAV_LIT_DEC.match(lit):
-            return ("exact", lit)
-        if cls._HAV_LIT_DBL.match(lit):
-            return ("double", lit.rstrip("dD"))
-        dm = cls._HAV_LIT_DATE.match(lit)
-        if dm is not None:
-            return ("date", dm.group(1))
-        sm = cls._HAV_LIT_STR.match(lit)
-        if sm is None:
+        lim = None if m.group("lim") is None else int(m.group("lim"))
+        try:
+            df = carrier(rows)
+            if hav_sql is not None:
+                df = df.where(hav_sql)
+            if sort:
+                keys = df.selectExpr(
+                    "__row", *(f"{e} AS `__s{j}`"
+                               for j, (e, _d, _n) in enumerate(sort)))
+                kinds = [f.dataType.simpleString()
+                         for f in keys.schema.fields[1:]]
+                if any(k != "timestamp" and k not in self._ORDER_KINDS
+                       and not k.startswith("decimal(") for k in kinds):
+                    return None  # arrays, collated strings, …: scan
+                if "timestamp" in kinds:
+                    # a collected timestamp is a wall-clock value in the
+                    # driver's zone; sort on the instant instead
+                    keys = keys.selectExpr("__row", *(
+                        f"unix_micros(`__s{j}`)" if k == "timestamp"
+                        else f"`__s{j}`" for j, k in enumerate(kinds)))
+                got = keys.collect()
+                # layered stable sorts, last ORDER BY item first; a NULL
+                # key sorts as (nb, 0), a value as (1 - nb, value)
+                for j in reversed(range(len(sort))):
+                    _e, desc, nulls_first = sort[j]
+                    conv = (_dbl_order_key if kinds[j] in ("float", "double")
+                            else lambda v: v)
+                    nb = int(nulls_first == desc)
+                    got.sort(reverse=desc, key=lambda r, j=j, nb=nb,
+                             conv=conv: (nb, 0) if r[j + 1] is None
+                             else (1 - nb, conv(r[j + 1])))
+                df = carrier([rows[r[0]] for r in got[:lim]])
+            out = df.select(*[
+                # COUNT is non-nullable relationally; the carrier may
+                # analyze nullable (an empty LocalRelation), and the
+                # other columns non-nullable when no group holds a
+                # NULL — coalesce / an identity nullif pin the
+                # relational schema and still fold to a LocalTableScan
+                (F.coalesce(F.col(f"`{src}`"), F.lit(0).cast("bigint"))
+                 if is_count else F.nullif(F.col(f"`{src}`"), F.lit(None))
+                 ).alias(name)
+                for src, name, is_count, _a in outs])
+            if lim is not None and not sort:
+                # LIMIT without ORDER BY: any n groups are a valid answer
+                out = out.limit(lim)
+            return out
+        except PySparkException:
+            # the carrier cannot resolve a tail the way the relational
+            # plan would, or evaluating it raised: the relational path
+            # decides (and raises Spark's own error where it must)
             return None
-        return ("str", sm.group(1))
-
-    @staticmethod
-    def _parsed_out_name(p) -> str:
-        """Output name of one parsed item — the spec loop's auto-alias
-        formula, shared so HAVING/ORDER BY resolution and the built
-        specs can never disagree."""
-        if p[0] == "group":
-            return p[2]
-        _, fn, col, alias = p
-        if alias:
-            return alias
-        if fn == "count" and col is None:
-            return "count(1)"
-        if fn == "cntd":
-            return f"count(DISTINCT {col})"
-        return f"{fn}({col})"
-
-    def _resolve_having_operand(self, text: str, parsed: list,
-                                gcols: list, case_sensitive: bool,
-                                rset: dict, ambiguous) -> int | None:
-        """Operand text → index into ``parsed`` (appending a HIDDEN
-        item for an expression not in the SELECT); ``None`` = outside
-        the grammar (caller falls back). Resolution order mirrors
-        Spark: grouping columns and aggregate expressions first, then
-        output aliases; an operand matching two outputs refuses (the
-        relational path would raise AMBIGUOUS_REFERENCE — never
-        answer a statement Spark itself rejects)."""
-        text = text.strip()
-        im = self._META_AGG_RE.match(text)
-        if im is not None:
-            if im.group(1) or im.group(4) or im.group(6):
-                return None  # an alias inside an operand is not SQL
-            if im.group(5):
-                fnk, col = "cntd", im.group(5)
-            elif im.group(2):
-                fnk, col = im.group(2).lower(), im.group(3)
-            else:
-                fnk, col = "count", None
-            colk = (col if case_sensitive or col is None
-                    else col.lower())
-            for i, p in enumerate(parsed):
-                if p[0] != "agg" or p[1] != fnk:
-                    continue
-                pk = (p[2] if case_sensitive or p[2] is None
-                      else p[2].lower())
-                if pk == colk:
-                    return i
-            parsed.append(("agg", fnk, col, f"__hav{len(parsed)}"))
-            return len(parsed) - 1
-        bm = self._BARE_COL_RE.match(text)
-        if bm is None or bm.group(2) or bm.group(1).isdigit():
-            return None
-        key = bm.group(1) if case_sensitive else bm.group(1).lower()
-        if key in ambiguous:
-            return None
-        rc = rset.get(key)
-        if rc is not None and rc in gcols:
-            for i, p in enumerate(parsed):
-                if p[0] == "group" and p[1] == rc:
-                    return i
-            parsed.append(("group", rc, f"__hav{len(parsed)}"))
-            return len(parsed) - 1
-        if key.startswith("__"):
-            # hidden machinery names (__havN/__hxN) are not user
-            # addressables — an operand spelling one is an unresolved
-            # column in the relational plan (and a user alias that
-            # happens to start with '__' refuses into the fallback,
-            # which resolves it itself)
-            return None
-        hits = [i for i, p in enumerate(parsed)
-                if (self._parsed_out_name(p) if case_sensitive
-                    else self._parsed_out_name(p).lower()) == key]
-        return hits[0] if len(hits) == 1 else None
-
-    # ------------------------------------- arithmetic operand exprs
-    # (r15) HAVING / ORDER BY items may be ARITHMETIC over provable
-    # operands — ratios and sums of aggregates (sum(a)/count(*),
-    # sum(a)+sum(b)-count(*), avg chains) and comparisons between two
-    # operands — all derivable from the recorded exact stats. The
-    # replicated Spark 4.1 semantics (measured):
-    #   - int-family ÷ int-family and anything involving double is
-    #     DOUBLE IEEE arithmetic (bigint/bigint division IS double
-    #     division: float(a)/float(b) bit-for-bit);
-    #   - int-family +/- promotes to the wider operand type and, under
-    #     ANSI, ERRORS on overflow — a value outside the result type's
-    #     range REFUSES the statement so the relational path raises;
-    #   - division by zero ERRORS under ANSI — same refusal;
-    #   - decimal/float operands refuse (decimal precision algebra and
-    #     float32 rounding are not replicated — fall back);
-    #   - NULL operands propagate to NULL (dropped by HAVING, ordered
-    #     by the NULLS clause).
-
-    _INT_ARITH_BOUNDS = {
-        "tinyint": 1 << 7, "smallint": 1 << 15, "int": 1 << 31,
-        "integer": 1 << 31, "bigint": 1 << 63, "long": 1 << 63,
-    }
-
-    @classmethod
-    def _split_arith(cls, text: str) -> list | None:
-        """``"sum(a)/count(*) + x"`` → ``["sum(a)", "/", "count(*)",
-        "+", "x"]`` split at depth-0 unquoted +, -, / — ``None`` when
-        there is no operator (not an expression) or a piece is empty
-        (unary signs, trailing operators: refuse)."""
-        parts, buf, depth, i, n = [], "", 0, 0, len(text)
-        in_q = False
-        while i < n:
-            c = text[i]
-            if in_q:
-                buf += c
-                in_q = c != "'"
-            elif c == "'":
-                buf += c
-                in_q = True
-            elif c == "(":
-                depth += 1
-                buf += c
-            elif c == ")":
-                depth -= 1
-                buf += c
-            elif depth == 0 and c in "+-/":
-                if not buf.strip():
-                    return None  # unary / doubled operator
-                parts += [buf.strip(), c]
-                buf = ""
-            else:
-                buf += c
-            i += 1
-        if depth != 0 or in_q or not buf.strip() or len(parts) < 2:
-            return None
-        parts.append(buf.strip())
-        return parts
-
-    def _resolve_operand_expr(self, text: str, parsed: list,
-                              gcols: list, case_sensitive: bool,
-                              rset: dict, ambiguous,
-                              visible_only: int | None = None
-                              ) -> int | None:
-        """Operand text → index into ``parsed``: a simple operand via
-        :meth:`_resolve_having_operand`, else an ARITHMETIC expression
-        over simple operands appended as a hidden ``("expr", node)``
-        item (node = leaf index | ("arith", op, l, r), '/' binding
-        tighter than +/-, left-associative). ``visible_only`` bounds
-        every LEAF to the SELECT items — the measured Spark-4.1 rule
-        for aggregate-expression ORDER BY items, whose leaves must
-        resolve against the project output (an unselected aggregate
-        leaf is an analyzer error the fallback reproduces)."""
-        idx = self._resolve_having_operand(
-            text, parsed, gcols, case_sensitive, rset, ambiguous)
-        if idx is not None:
-            if visible_only is not None and idx >= visible_only:
-                return None
-            return idx
-        parts = self._split_arith(text)
-        if parts is None:
-            return None
-        leaves = []
-        for j in range(0, len(parts), 2):
-            li = self._resolve_having_operand(
-                parts[j], parsed, gcols, case_sensitive, rset,
-                ambiguous)
-            if li is None or (visible_only is not None
-                              and li >= visible_only):
-                return None
-            leaves.append(li)
-        # precedence: fold '/' chains into terms first, then +/-
-        terms: list = [leaves[0]]
-        ops: list = []
-        for j, op in enumerate(parts[1::2]):
-            nxt = leaves[j + 1]
-            if op == "/":
-                terms[-1] = ("arith", "/", terms[-1], nxt)
-            else:
-                ops.append(op)
-                terms.append(nxt)
-        node = terms[0]
-        for op, t in zip(ops, terms[1:]):
-            node = ("arith", op, node, t)
-        parsed.append(("expr", node, None, f"__hx{len(parsed)}"))
-        return len(parsed) - 1
-
-    @classmethod
-    def _arith_result_type(cls, op: str, lt: str, rt: str):
-        """Spark's result type for one arithmetic step, or ``None``
-        for any pairing outside the replicated set (decimals, float32,
-        strings, dates — fall back)."""
-        ints = cls._INT_ARITH_BOUNDS
-        num = lambda t: t in ints or t == "double"  # noqa: E731
-        if not (num(lt) and num(rt)):
-            return None
-        if op == "/" or lt == "double" or rt == "double":
-            return "double"
-        return lt if ints[lt] >= ints[rt] else rt
-
-    def _expr_spec(self, node, specs):
-        """Spec entry pieces for an ``("expr", node)`` parsed item:
-        ``(carrier, cast_to, value_fn)`` with the value_fn taking the
-        row-so-far (leaf indices are always lower — operands resolve
-        before the expr is appended), or ``None`` when any type step
-        is outside the replicated arithmetic."""
-        def ntype(nd):
-            if isinstance(nd, int):
-                return (specs[nd][2] or specs[nd][1]).lower()
-            _, op, l, r = nd
-            lt, rt = ntype(l), ntype(r)
-            if lt is None or rt is None:
-                return None
-            return self._arith_result_type(op, lt, rt)
-
-        rt = ntype(node)
-        if rt is None:
-            return None
-        ints = self._INT_ARITH_BOUNDS
-
-        def ev(nd, row):
-            if isinstance(nd, int):
-                v = row[nd]
-                if v is None or v is _REFUSE:
-                    return v
-                t = (specs[nd][2] or specs[nd][1]).lower()
-                return float(v) if t == "double" else int(v)
-            _, op, l, r = nd
-            lv, rv = ev(l, row), ev(r, row)
-            if lv is _REFUSE or rv is _REFUSE:
-                return _REFUSE
-            if lv is None or rv is None:
-                return None
-            t = ntype(nd)
-            if t == "double":
-                lf, rf = float(lv), float(rv)
-                if op == "/":
-                    if rf == 0.0:
-                        # ANSI DIVIDE_BY_ZERO: the relational path
-                        # raises — never answer what Spark rejects
-                        return _REFUSE
-                    return lf / rf
-                return lf + rf if op == "+" else lf - rf
-            res = lv + rv if op == "+" else lv - rv
-            if not (-ints[t] <= res < ints[t]):
-                return _REFUSE  # ANSI overflow: the fallback raises
-            return res
-
-        carrier = "string" if rt == "double" else "bigint"
-        cast_to = "double" if rt == "double" else (
-            None if rt in ("bigint", "long") else rt)
-
-        def fv(key, gf, row):
-            v = ev(node, row)
-            if v is _REFUSE or v is None:
-                return v
-            return repr(v) if rt == "double" else int(v)
-
-        fv._needs_row = True
-        return carrier, cast_to, fv
-
-    @staticmethod
-    def _hav_tokens(text: str) -> list | None:
-        """HAVING text → tokens: LP/RP (top-level grouping parens),
-        AND/OR/NOT keywords, and ATOM runs. Parens inside an already-
-        started atom (``count(*)``) and anything inside quotes stay in
-        the atom; an unbalanced tail returns None."""
-        toks: list = []
-        buf = ""
-        depth = 0
-        i, n = 0, len(text)
-
-        def flush():
-            nonlocal buf
-            if buf.strip():
-                toks.append(("ATOM", buf.strip()))
-            buf = ""
-
-        while i < n:
-            c = text[i]
-            if c == "'":
-                j = text.find("'", i + 1)
-                if j < 0:
-                    return None
-                buf += text[i:j + 1]
-                i = j + 1
-                continue
-            if c == "(":
-                if not buf.strip():
-                    flush()
-                    toks.append(("LP", "("))
-                else:
-                    depth += 1
-                    buf += c
-                i += 1
-                continue
-            if c == ")":
-                if depth == 0:
-                    flush()
-                    toks.append(("RP", ")"))
-                else:
-                    depth -= 1
-                    buf += c
-                i += 1
-                continue
-            if depth == 0:
-                mkw = re.match(r"(AND|OR|NOT)\b", text[i:], re.I)
-                if mkw and (i == 0 or not (text[i - 1].isalnum()
-                                           or text[i - 1] == "_")):
-                    kw = mkw.group(1).upper()
-                    # a NOT after atom text belongs to the atom (`IS
-                    # NOT NULL`, `NOT BETWEEN`, `NOT IN`): boolean NOT
-                    # only ever starts a factor, where the buffer is
-                    # empty (r14)
-                    if kw == "NOT" and buf.strip():
-                        buf += mkw.group(1)
-                        i += len(mkw.group(1))
-                        continue
-                    # the first AND after an unclosed BETWEEN is the
-                    # range separator, not a boolean conjunction
-                    # (quoted spans stripped so a 'BETWEEN' inside a
-                    # string literal can't absorb a real AND) (r14)
-                    if kw == "AND" and re.search(
-                            r"\bBETWEEN\b(?!.*\bAND\b)",
-                            re.sub(r"'[^']*'", "", buf),
-                            re.I | re.S):
-                        buf += mkw.group(1)
-                        i += len(mkw.group(1))
-                        continue
-                    flush()
-                    toks.append((kw, mkw.group(1)))
-                    i += len(mkw.group(1))
-                    continue
-            buf += c
-            i += 1
-        if depth != 0:
-            return None
-        flush()
-        return toks
-
-    def _parse_having_text(self, text, parsed, gcols, case_sensitive,
-                           rset, ambiguous):
-        toks = self._hav_tokens(text)
-        if toks is None:
-            return None
-        ctx = (parsed, gcols, case_sensitive, rset, ambiguous)
-        ast, pos = self._hav_expr(toks, 0, ctx)
-        if ast is None or pos != len(toks):
-            return None
-        return ast
-
-    def _hav_expr(self, toks, pos, ctx):
-        left, pos = self._hav_term(toks, pos, ctx)
-        if left is None:
-            return None, pos
-        while pos < len(toks) and toks[pos][0] == "OR":
-            right, pos = self._hav_term(toks, pos + 1, ctx)
-            if right is None:
-                return None, pos
-            left = ("or", left, right)
-        return left, pos
-
-    def _hav_term(self, toks, pos, ctx):
-        left, pos = self._hav_factor(toks, pos, ctx)
-        if left is None:
-            return None, pos
-        while pos < len(toks) and toks[pos][0] == "AND":
-            right, pos = self._hav_factor(toks, pos + 1, ctx)
-            if right is None:
-                return None, pos
-            left = ("and", left, right)
-        return left, pos
-
-    def _hav_factor(self, toks, pos, ctx):
-        if pos >= len(toks):
-            return None, pos
-        kind, _val = toks[pos]
-        if kind == "NOT":
-            inner, pos = self._hav_factor(toks, pos + 1, ctx)
-            if inner is None:
-                return None, pos
-            return ("not", inner), pos
-        if kind == "LP":
-            inner, pos = self._hav_expr(toks, pos + 1, ctx)
-            if (inner is None or pos >= len(toks)
-                    or toks[pos][0] != "RP"):
-                return None, pos
-            return inner, pos + 1
-        if kind == "ATOM":
-            atom = self._hav_atom(_val, ctx)
-            if atom is None:
-                return None, pos
-            return atom, pos + 1
-        return None, pos
-
-    def _hav_atom(self, text, ctx):
-        parsed, gcols, case_sensitive, rset, ambiguous = ctx
-
-        def resolve(lhs):
-            # r15: operands may be arithmetic over simple operands
-            return self._resolve_operand_expr(
-                lhs, parsed, gcols, case_sensitive, rset, ambiguous)
-
-        nm = self._HAV_NULL_RE.match(text)
-        if nm is not None:
-            idx = resolve(nm.group("lhs"))
-            if idx is None:
-                return None
-            return ("null", idx, bool(nm.group("neg")))
-        cm = self._HAV_CMP_RE.match(text)
-        cm_saved = cm
-        if cm is not None:
-            lit = self._hav_literal(cm.group("lit"))
-            if lit is None:
-                # escapes/columns fall back — but first let the
-                # BETWEEN/IN matchers below try the atom: a string
-                # literal CONTAINING an operator char (p IN ('a=b'),
-                # x BETWEEN 'a<b' AND 'z') greedily matches the CMP
-                # regex with a truncated "literal", while the
-                # quote-aware matchers parse it whole; an
-                # operand-shaped RHS (sum(a) > sum(b)) is retried as
-                # an operand comparison after those
-                cm = None
-            else:
-                idx = resolve(cm.group("lhs"))
-                if idx is None:
-                    return None
-                op = cm.group("op")
-                op = "!=" if op == "<>" else ("=" if op == "==" else op)
-                return ("cmp", idx, op, *lit)
-        bm = self._HAV_BETWEEN_RE.match(text)
-        if bm is not None:
-            # Spark itself desugars Between(a,l,u) to a>=l AND a<=u
-            # with each comparison coerced INDEPENDENTLY — exactly
-            # this AST, so mixed-kind bounds need no guard
-            lo = self._hav_literal(bm.group("lo"))
-            hi = self._hav_literal(bm.group("hi"))
-            if lo is None or hi is None:
-                return None
-            idx = resolve(bm.group("lhs"))
-            if idx is None:
-                return None
-            ast = ("and", ("cmp", idx, ">=", *lo),
-                   ("cmp", idx, "<=", *hi))
-            return ("not", ast) if bm.group("neg") else ast
-        im = self._HAV_IN_RE.match(text)
-        if im is not None:
-            parts = _split_top(im.group("list"))
-            if not parts:
-                return None  # IN () is a Spark parse error — surface it
-            lits = [self._hav_literal(p) for p in parts]
-            if any(lt is None for lt in lits):
-                return None
-            if len({k for k, _v in lits}) > 1:
-                # Spark coerces the WHOLE in-list + operand to one
-                # common type; a mixed exact+double list collapses
-                # int operands past 2^53 where per-element domains
-                # would not — refuse rather than risk divergence
-                return None
-            idx = resolve(im.group("lhs"))
-            if idx is None:
-                return None
-            ast = ("cmp", idx, "=", *lits[0])
-            for lt in lits[1:]:
-                ast = ("or", ast, ("cmp", idx, "=", *lt))
-            # x NOT IN (a, b) ≡ NOT(x = a OR x = b), Kleene-exact:
-            # a NULL operand stays NULL through the negation
-            return ("not", ast) if im.group("neg") else ast
-        if cm_saved is not None:
-            # r15: comparison between two OPERANDS (sum(a) > sum(b),
-            # sum(a)+sum(b) > count(*)) — both sides resolve as
-            # (possibly arithmetic) operand expressions
-            ridx = resolve(cm_saved.group("lit"))
-            if ridx is None:
-                return None
-            lidx = resolve(cm_saved.group("lhs"))
-            if lidx is None:
-                return None
-            op = cm_saved.group("op")
-            op = "!=" if op == "<>" else ("=" if op == "==" else op)
-            return ("cmpop", lidx, op, ridx)
-        return None
-
-    @staticmethod
-    def _hav_predicate(ast, specs):
-        """AST → row predicate returning Kleene True/False/None (a
-        group survives only on TRUE), or ``None`` when an operand's
-        type has no provable comparison domain. Domains replicate
-        Spark's coercions (measured): fractional literals are
-        DECIMALS (exact against int/decimal operands); scientific /
-        D-suffixed literals and float/double operands force the
-        DOUBLE domain, where ``_dbl_order_key`` reproduces Spark's
-        NaN-above-everything comparison semantics (``NaN = NaN`` is
-        true, ``NaN > 1e308`` is true) and ``float(Decimal)`` is the
-        same correctly-rounded cast Spark applies; strings compare
-        binary (codepoint == UTF-8 byte order)."""
-        import decimal
-
-        _OPS = {
-            "=": lambda a, b: a == b,
-            "!=": lambda a, b: a != b,
-            "<": lambda a, b: a < b,
-            "<=": lambda a, b: a <= b,
-            ">": lambda a, b: a > b,
-            ">=": lambda a, b: a >= b,
-        }
-        _INTS = ("tinyint", "smallint", "int", "integer", "bigint",
-                 "long")
-
-        def build(node):
-            tag = node[0]
-            if tag in ("and", "or"):
-                lf, rf = build(node[1]), build(node[2])
-                if lf is None or rf is None:
-                    return None
-                if tag == "and":
-                    def f(row, _l=lf, _r=rf):
-                        a, b = _l(row), _r(row)
-                        if a is False or b is False:
-                            return False
-                        if a is None or b is None:
-                            return None
-                        return True
-                else:
-                    def f(row, _l=lf, _r=rf):
-                        a, b = _l(row), _r(row)
-                        if a is True or b is True:
-                            return True
-                        if a is None or b is None:
-                            return None
-                        return False
-                return f
-            if tag == "not":
-                inner = build(node[1])
-                if inner is None:
-                    return None
-
-                def f(row, _i=inner):
-                    v = _i(row)
-                    return None if v is None else (not v)
-                return f
-            if tag == "null":
-                _, idx, neg = node
-
-                def f(row, _i=idx, _n=neg):
-                    isnull = row[_i] is None
-                    return (not isnull) if _n else isnull
-                return f
-            if tag == "cmpop":
-                # r15: comparison between two OPERANDS — a common
-                # comparison domain must be provable for both result
-                # types (exact↔exact compares as DECIMAL, any double
-                # forces the IEEE domain with NaN-above-everything,
-                # string↔string binary, date↔date as dates — mixed
-                # families refuse to the relational coercion)
-                _, li, op, ri = node
-                lrt = (specs[li][2] or specs[li][1]).lower()
-                rrt = (specs[ri][2] or specs[ri][1]).lower()
-
-                def dom(rt0):
-                    if rt0 in _INTS or rt0.startswith("decimal("):
-                        return "exact"
-                    if rt0 in ("double", "float"):
-                        return "double"
-                    return rt0
-                ld, rd = dom(lrt), dom(rrt)
-                if {ld, rd} <= {"exact", "double"}:
-                    if "double" in (ld, rd):
-                        def conv2(v):
-                            return _dbl_order_key(float(v))
-                    else:
-                        def conv2(v):
-                            return decimal.Decimal(str(v))
-                elif ld == rd == "string":
-                    conv2 = str
-                elif ld == rd == "date":
-                    import datetime as _dt
-
-                    def conv2(v):
-                        return _dt.date.fromisoformat(str(v))
-                else:
-                    return None
-
-                def f(row, _l=li, _r=ri, _c=conv2, _op=_OPS[op]):
-                    a, b = row[_l], row[_r]
-                    if a is None or b is None:
-                        return None
-                    return _op(_c(a), _c(b))
-                return f
-            _, idx, op, lk, lv = node
-            rt = (specs[idx][2] or specs[idx][1]).lower()
-            if rt == "date" and lk in ("str", "date"):
-                # strict zero-padded ISO literal only — Spark's cast
-                # also accepts loose forms ('2024-1-2'), which refuse
-                # into the fallback rather than risk a different parse
-                import datetime as _dt
-                try:
-                    lit = _date_desc(lv)
-                except ValueError:
-                    return None
-
-                def conv(v):
-                    return _dt.date.fromisoformat(str(v))
-            elif lk == "date":
-                return None  # a DATE literal against a non-date operand
-            elif lk == "str":
-                if rt != "string":
-                    return None
-                conv, lit = str, lv
-            elif rt in ("double", "float") or lk == "double":
-                if not (rt in ("double", "float") or rt in _INTS
-                        or rt.startswith("decimal(")):
-                    return None
-
-                def conv(v):
-                    return _dbl_order_key(float(v))
-                lit = _dbl_order_key(float(lv))
-            elif rt in _INTS or rt.startswith("decimal("):
-                def conv(v):
-                    return decimal.Decimal(str(v))
-                lit = decimal.Decimal(lv)
-            else:
-                return None  # dates/timestamps: fall back
-
-            def f(row, _i=idx, _c=conv, _lit=lit, _op=_OPS[op]):
-                v = row[_i]
-                if v is None:
-                    return None  # SQL: comparison with NULL = unknown
-                return _op(_c(v), _lit)
-            return f
-
-        return build(ast)
-
-    def _rewrite_order_aggs(self, text, parsed, gcols, case_sensitive,
-                            rset, ambiguous, extra: dict,
-                            n_visible: int | None = None):
-        """ORDER BY tail with AGGREGATE (or r15: ARITHMETIC) items
-        resolved to (possibly hidden) spec positions — Spark sorts by
-        the aggregate value whether or not it is selected, and by
-        arithmetic over SELECTED outputs (an expression with an
-        unselected aggregate leaf is an analyzer error — measured —
-        so expression leaves are bounded to the first ``n_visible``
-        items and anything past that refuses into the fallback, which
-        reproduces the error). Rewrites each such item to a
-        placeholder recorded in ``extra`` (auto-named outputs like
-        ``sum(x)`` are not word-shaped, so a textual rewrite to the
-        output name could not resolve); plain items pass through.
-        ``None`` = outside the grammar."""
-        out_items = []
-        for item in _split_top(text):
-            item = item.strip()
-            if self._ORDER_ITEM_RE.match(item):
-                out_items.append(item)
-                continue
-            sm = re.match(r"^(?P<body>.+?)(?P<suf>(?:\s+(?:ASC|DESC))?"
-                          r"(?:\s+NULLS\s+(?:FIRST|LAST))?)$",
-                          item, re.I | re.S)
-            body = sm.group("body").strip()
-            if self._META_AGG_RE.match(body) is not None:
-                idx = self._resolve_having_operand(
-                    body, parsed, gcols, case_sensitive, rset,
-                    ambiguous)
-            else:
-                idx = self._resolve_operand_expr(
-                    body, parsed, gcols, case_sensitive, rset,
-                    ambiguous, visible_only=n_visible)
-                if idx is not None and parsed[idx][0] != "expr":
-                    # a plain non-agg body (e.g. a bare alias the
-                    # ORDER_ITEM regex already covers, or a grouping
-                    # column) gained nothing here — keep the strict
-                    # grammar: only genuine expressions pass
-                    return None
-            if idx is None:
-                return None
-            ph = f"__ob{len(extra)}"
-            extra[ph] = idx
-            out_items.append(ph + sm.group("suf"))
-        return ", ".join(out_items)
-
-    @staticmethod
-    def _sum_checked(t, snap, cname: str, st: str):
-        """:meth:`_sum_render` over a snapshot-resolved sum."""
-        res = t._sum_from(snap, cname)
-        if res is None:
-            return None
-        return Catalog._sum_render(res, st)
 
     @staticmethod
     def _avg_dec_result_type(st: str) -> str:
@@ -2685,8 +1593,8 @@ class Catalog:
     def _sum_result_type(st: str) -> str:
         """Spark's SUM result type for an exact input type: integer
         family → ``bigint``; ``decimal(p,s)`` →
-        ``decimal(min(38,p+10),s)``. The ONE source both the GROUP BY
-        carrier cast and :meth:`_sum_render`'s overflow bound use —
+        ``decimal(min(38,p+10),s)``. The ONE source both the carrier
+        cast and :meth:`_sum_value`'s overflow bound use —
         drifting copies would let a value pass a bound its cast type
         cannot hold."""
         if st.startswith("decimal("):
@@ -2695,44 +1603,29 @@ class Catalog:
         return "bigint"
 
     @staticmethod
-    def _sum_render(res: tuple, st: str):
-        """``(value_string_or_None, result_type)`` for an exact
-        ``(sum, nonnull)`` pair, in the relational path's RESULT TYPE
-        (:meth:`_sum_result_type`); value ``None`` = SQL NULL (zero
-        non-null rows). Returns ``None`` (refuse → fallback) when the
-        sum would overflow that type — non-ANSI Spark wraps/NULLs
-        there, and the fallback reproduces whatever Spark does rather
-        than guessing."""
+    def _sum_value(res: tuple | None, st: str):
+        """The relational SUM of an exact ``(sum, nonnull)`` pair as a
+        carrier value of :meth:`_sum_result_type`: an int for bigint, a
+        decimal string for decimals, ``None`` (SQL NULL) for zero
+        non-null rows. ``_REFUSE`` when ``res`` is unprovable or the
+        sum would overflow that type — Spark errors or wraps there, and
+        the fallback reproduces whatever Spark does rather than
+        guessing."""
         import decimal
 
+        if res is None:
+            return _REFUSE
         total, nonnull = res
-        rt = Catalog._sum_result_type(st).upper()
-        if rt.startswith("DECIMAL("):
-            rp, rs = (int(x)
-                      for x in rt[len("DECIMAL("):-1].split(","))
-            if nonnull == 0:
-                return (None, rt)
-            if abs(total) >= decimal.Decimal(10) ** (rp - rs):
-                return None
-            return (str(total), rt)
         if nonnull == 0:
-            return (None, "BIGINT")
-        if not (-(2 ** 63) <= int(total) < 2 ** 63):
             return None
-        return (str(int(total)), "BIGINT")
-
-    @classmethod
-    def _sum_literal(cls, t, snap, cname: str, st: str) -> str | None:
-        """:meth:`_sum_checked` rendered as a one-row SQL literal."""
-        r = cls._sum_checked(t, snap, cname, st)
-        if r is None:
-            return None
-        v, rt = r
-        if v is None:
-            return f"CAST(NULL AS {rt})"
-        # string-cast render: the relational SUM is nullable=True and
-        # a bare int literal cast would analyze non-nullable
-        return f"CAST('{v}' AS {rt})"
+        rt = Catalog._sum_result_type(st)
+        if rt == "bigint":
+            return int(total) if -(2 ** 63) <= total < 2 ** 63 \
+                else _REFUSE
+        rp, rs = (int(x) for x in rt[len("decimal("):-1].split(","))
+        if abs(total) >= decimal.Decimal(10) ** (rp - rs):
+            return _REFUSE
+        return str(total)
 
     _TC_RE = re.compile(
         r"table_changes\(\s*'([\w.`]+)'\s*,\s*(\d+)\s*(?:,\s*(\d+))?\s*\)",
@@ -3470,34 +2363,6 @@ class Catalog:
         return None
 
 
-def _flt_sql_str(v: float) -> str:
-    """A float as the string Spark's string→float/double cast parses
-    back to the identical value: Java ``Double.parseDouble`` accepts
-    ``NaN``/``Infinity``/``-Infinity`` (not Python's ``nan``/``inf``)
-    and is correctly rounded on ``repr``'s shortest decimal."""
-    import math
-
-    if math.isnan(v):
-        return "NaN"
-    if math.isinf(v):
-        return "Infinity" if v > 0 else "-Infinity"
-    return repr(v)
-
-
-def _nullable_str_lit(s: str) -> str:
-    """A string value as a SQL expression that (a) parses back to
-    exactly ``s`` under EVERY parser mode — base64 transport, no
-    literal-escaping hazards (the ``local_df`` rendering contract) —
-    and (b) analyzes as ``nullable=True``, matching the relational
-    MIN/MAX aggregate's schema (a plain literal or a binary→string
-    cast is non-nullable; ``nullif(x, NULL)`` is an identity that
-    adds nullability and still constant-folds to a LocalRelation)."""
-    import base64
-
-    enc = base64.b64encode(s.encode("utf-8")).decode("ascii")
-    return f"nullif(CAST(unbase64('{enc}') AS STRING), NULL)"
-
-
 def _rx(pattern: str, stmt: str) -> "re.Match":
     m = re.match(pattern, stmt, re.I | re.S)
     if not m:
@@ -3514,6 +2379,15 @@ def _parse_props(body: str) -> dict[str, str]:
             raise ValueError(f"bad TBLPROPERTIES entry {part!r}")
         props[km.group(1)] = km.group(2)
     return props
+
+
+def _blank_quoted(s: str) -> str:
+    """``s`` with the body of every ''/"" literal replaced by spaces
+    (same length), so keyword and identifier scans never match inside
+    a string."""
+    return re.sub(r"'[^']*'|\"[^\"]*\"",
+                  lambda q: q.group(0)[0] + " " * (len(q.group(0)) - 2)
+                  + q.group(0)[-1], s)
 
 
 def _outside_quotes(s: str, idx: int) -> bool:

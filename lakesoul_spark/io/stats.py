@@ -70,8 +70,7 @@ def _json_flt(v: float):
     arrow/Torch readers parse these records), so infinite extrema
     ride as the Java-parseable sentinel strings ``"Infinity"`` /
     ``"-Infinity"`` — every Python reader already funnels the slot
-    through ``float()`` (which accepts them), and the SQL renderer
-    (``_flt_sql_str``) spells them the same way."""
+    through ``float()`` (which accepts them)."""
     if math.isinf(v):
         return "Infinity" if v > 0 else "-Infinity"
     return v

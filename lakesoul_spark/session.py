@@ -22,9 +22,10 @@ def lakesoul_session(
     """Build a SparkSession with scale-appropriate defaults.
 
     On a real cluster ``master``/``shuffle_partitions`` come from the
-    environment; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+    environment; locally we default to ``local[$SPARK_GRAFT_CPUS]``,
+    or one task slot per host CPU when that variable is unset.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or max(int(cpus) if cpus.isdigit() else 32, 8))
     b = (

@@ -192,7 +192,6 @@ def sessionize(
     *,
     ts_col: str,
     gap_ms: int,
-    engine: str = "auto",
 ) -> DataFrame:
     """Event-time session windows with a ``gap_ms`` inactivity timeout.
 
@@ -214,22 +213,9 @@ def sessionize(
 
     State per key = the open sessions inside the watermark horizon
     (parallel epoch-us arrays, bounded by delay/gap — NOT stream
-    length). ``engine``: ``"apply"`` uses ``applyInPandasWithState`` +
-    EventTimeTimeout (runs everywhere); ``"tws"`` uses Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState + real event-time
-    timers, the Flink analog — requires the ``protobuf`` package);
-    ``"auto"`` picks tws when protobuf is importable. Identical
-    emissions either way.
+    length), kept by ``applyInPandasWithState`` with an
+    EventTimeTimeout.
     """
-    if engine not in ("auto", "apply", "tws"):
-        raise ValueError(f"engine must be auto|apply|tws, got {engine!r}")
-    if engine == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            engine = "tws"
-        except ImportError:
-            engine = "apply"
     key_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in sdf.schema
@@ -248,11 +234,6 @@ def sessionize(
         for name, val in reversed(list(zip(key_cols, key))):
             out.insert(0, name, val)
         return out
-
-    if engine == "tws":
-        return _sessionize_tws(
-            sdf, key_cols, ts_col, gap_ms, out_schema, emit
-        )
 
     def _split(merged, wm_ms):
         wm_us = wm_ms * 1000
@@ -304,86 +285,12 @@ def sessionize(
     )
 
 
-def _sessionize_tws(sdf, key_cols, ts_col, gap_ms, out_schema, emit):
-    """transformWithStateInPandas engine for :func:`sessionize` (typed
-    ValueState + real event-time timers). One timer per key tracks the
-    earliest open session's ``end + gap`` deadline; expiry closes every
-    session the watermark has passed and re-arms for the next."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_ms * 1000
-
-    class _Sessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState("open", _SESSIONS_STATE)
-
-        def _drain(self, wm_ms: int):
-            cur = self._open.get() if self._open.exists() else None
-            if cur is None:
-                return [], []
-            merged = list(zip(*cur))
-            wm_us = wm_ms * 1000
-            closed = [t for t in merged if t[1] + gap_us <= wm_us]
-            keep = [t for t in merged if t[1] + gap_us > wm_us]
-            return closed, keep
-
-        def _store(self, keep, wm_ms: int) -> None:
-            if keep:
-                self._open.update((
-                    [s for s, _, _ in keep],
-                    [e for _, e, _ in keep],
-                    [n for _, _, n in keep],
-                ))
-                deadline = min(e for _, e, _ in keep) // 1000 + gap_ms
-                self._handle.registerTimer(max(deadline, wm_ms + 1))
-            elif self._open.exists():
-                self._open.clear()
-
-        def handleInputRows(self, key, rows, timer_values):
-            wm_ms = timer_values.getCurrentWatermarkInMs()
-            sessions = _batch_islands(rows, ts_col, gap_us)
-            if self._open.exists():
-                sessions += list(zip(*self._open.get()))
-            if not sessions:
-                return
-            merged = _merge_gap_sessions(sessions, gap_us)
-            wm_us = wm_ms * 1000
-            closed = [t for t in merged if t[1] + gap_us <= wm_us]
-            keep = [t for t in merged if t[1] + gap_us > wm_us]
-            self._store(keep, wm_ms)
-            if closed:
-                yield emit(key, closed)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            wm_ms = max(timer_values.getCurrentWatermarkInMs(),
-                        expired_timer_info.getExpiryTimeInMs())
-            closed, keep = self._drain(wm_ms)
-            self._store(keep, wm_ms)
-            if closed:
-                yield emit(key, closed)
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Sessions(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
 def latest_state_stream(
     sdf: DataFrame,
     key_cols: list[str],
     *,
     order_col: str,
     ttl_ms: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Continuous per-key latest-state maintenance with optional TTL
     tombstones — the Spark re-expression of a Flink keyed process
@@ -401,17 +308,9 @@ def latest_state_stream(
     the LakeSoul sink on a CDC table and downstream MOR reads track
     the live set.
 
-    ``engine``: ``"apply"`` (default path) uses
-    ``applyInPandasWithState`` + ProcessingTimeTimeout — runs
-    everywhere. ``"tws"`` uses Spark 4's
-    ``transformWithStateInPandas`` (typed ValueState + real timers,
-    the closest Flink analog) — requires the ``protobuf`` package,
-    which the TWS state client imports; ``"auto"`` picks tws when
-    protobuf is importable. Both produce identical 'u' emissions; the
-    TTL clock differs subtly on stale arrivals — ``apply`` must re-arm
-    the timeout on EVERY invocation (Spark clears it each call), so a
-    stale row extends the key's life, while ``tws`` timers are armed
-    per accepted update only.
+    Runs on ``applyInPandasWithState`` + ProcessingTimeTimeout. The
+    timeout is re-armed on EVERY invocation (Spark clears it each
+    call), so a stale row extends the key's life.
 
     State per key: one row. One keyed exchange; Arrow-batched Python.
     """
@@ -424,15 +323,6 @@ def latest_state_stream(
     for k in key_cols:
         if k not in cols:
             raise ValueError(f"key column {k!r} not in stream schema")
-    if engine not in ("auto", "apply", "tws"):
-        raise ValueError(f"engine must be auto|apply|tws, got {engine!r}")
-    if engine == "auto":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            engine = "tws"
-        except ImportError:
-            engine = "apply"
     out_ddl = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields]
         + ["op string"]
@@ -440,11 +330,6 @@ def latest_state_stream(
     state_ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in in_schema.fields
     )
-    if engine == "tws":
-        return _latest_state_tws(
-            sdf, key_cols, cols, order_col, ttl_ms, out_ddl, state_ddl
-        )
-
     def fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -470,8 +355,6 @@ def latest_state_stream(
             # stale arrival — keep state, emit nothing. Spark CLEARS any
             # previously-set timeout on every invocation, so the TTL
             # timer must be re-armed here or the key would never expire
-            # (and the 'tws' engine, whose registered timers persist,
-            # would diverge)
             if ttl_ms:
                 state.setTimeoutDuration(ttl_ms)
             return
@@ -489,67 +372,4 @@ def latest_state_stream(
     )
     return sdf.groupBy(*key_cols).applyInPandasWithState(
         fn, out_ddl, state_ddl, "update", timeout
-    )
-
-
-def _latest_state_tws(sdf, key_cols, cols, order_col, ttl_ms, out_ddl,
-                      state_ddl):
-    """transformWithStateInPandas engine for :func:`latest_state_stream`
-    (typed ValueState + per-key timers; Flink-style stale-timer
-    resolution: each update records its deadline and an expired timer
-    only fires the tombstone if it IS the latest deadline)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    state_with_deadline = state_ddl + ", __deadline bigint"
-
-    class _Latest(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._latest = handle.getValueState("latest", state_with_deadline)
-
-        def handleInputRows(self, key, rows, timer_values):
-            best = None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                cand = pdf.loc[pdf[order_col].idxmax()]
-                if best is None or cand[order_col] > best[order_col]:
-                    best = cand
-            if best is None:
-                return
-            cur = self._latest.get() if self._latest.exists() else None
-            oi = cols.index(order_col)
-            if cur is not None and not (best[order_col] > cur[oi]):
-                return
-            now = timer_values.getCurrentProcessingTimeInMs()
-            deadline = (now + ttl_ms) if ttl_ms else 0
-            self._latest.update(tuple(best[c] for c in cols) + (deadline,))
-            if ttl_ms:
-                self._handle.registerTimer(deadline)
-            out = {c: [best[c]] for c in cols}
-            out["op"] = ["u"]
-            yield pd.DataFrame(out, columns=cols + ["op"])
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            if not self._latest.exists():
-                return
-            stored = self._latest.get()
-            if expired_timer_info.getExpiryTimeInMs() < stored[-1]:
-                return  # superseded by a newer update's timer
-            out = {c: [stored[i]] for i, c in enumerate(cols)}
-            out["op"] = ["d"]
-            self._latest.clear()
-            yield pd.DataFrame(out, columns=cols + ["op"])
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Latest(),
-        outputStructType=out_ddl,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms else "None",
     )

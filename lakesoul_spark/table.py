@@ -763,18 +763,19 @@ class LakeSoulTable:
 
     @staticmethod
     def _count_from(snap) -> int | None:
-        """Count over an already-resolved provable snapshot — the
-        statement-level SQL fast path resolves ONE snapshot and reads
-        every aggregate from it, so a concurrent commit can never
-        produce a row mixing two table versions."""
+        """Count over an already-resolved provable snapshot (``None``
+        passes through)."""
         if snap is None:
             return None
         return LakeSoulTable._count_files(snap.files)
 
     @staticmethod
     def _count_files(files) -> int | None:
-        """Row count over a live-file list (the GROUP BY fast path
-        calls this per partition group with all gates pre-resolved)."""
+        """Row count over a live-file list. The SQL fast path resolves
+        ONE snapshot per statement and calls this and the other
+        ``_*_files`` helpers per group with every gate pre-resolved, so
+        a concurrent commit can never produce a row mixing two table
+        versions."""
         total = 0
         for f in files:
             if f.num_rows < 0:
@@ -826,19 +827,7 @@ class LakeSoulTable:
         )
         if dtype not in self._MINMAX_EXACT_TYPES:
             return None
-        return self._minmax_from(self._provable_snapshot(condition), col)
-
-    def _minmax_from(self, snap, col: str) -> tuple | None:
-        """Min/max over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
-        dtype = next(
-            (f.dataType.simpleString() for f in _ts(self.info).fields
-             if f.name == col), "",
-        )
-        if dtype not in self._MINMAX_EXACT_TYPES:
-            return None
+        snap = self._provable_snapshot(condition)
         if snap is None or not snap.files:
             return None
         return self._minmax_files(snap.files, col)
@@ -876,11 +865,6 @@ class LakeSoulTable:
         ``condition`` scopes to range partitions like
         :meth:`count_fast`. Sum is a python int for integer columns,
         ``Decimal`` for decimal columns."""
-        return self._sum_from(self._provable_snapshot(condition), col)
-
-    def _sum_from(self, snap, col: str) -> tuple | None:
-        """Sum over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
         from lakesoul_spark.io.writer import table_schema as _ts
 
         info = self.info
@@ -898,6 +882,7 @@ class LakeSoulTable:
         if not (dtype in self._SUM_EXACT_TYPES
                 or dtype.startswith("decimal(")):
             return None
+        snap = self._provable_snapshot(condition)
         if snap is None:
             return None
         has_default = info.column_defaults().get(col) is not None
@@ -961,27 +946,29 @@ class LakeSoulTable:
         every row count — derivable, but entangled with later default
         changes, so refused like :meth:`sum_fast`. ``condition``
         scopes to range partitions like :meth:`count_fast`."""
-        return self._count_col_from(self._provable_snapshot(condition),
-                                    col)
-
-    def _count_col_from(self, snap, col: str) -> int | None:
-        """COUNT(col) over an already-resolved provable snapshot (see
-        :meth:`_count_from` for why the SQL fast path shares one)."""
+        snap = self._provable_snapshot(condition)
         if snap is None:
             return None
         info = self.info
         if col in info.range_partitions:
-            from lakesoul_spark.io import partition as part_enc
-
-            total = 0
-            for f in snap.files:
-                if f.num_rows < 0:
-                    return None
-                v = part_enc.parse_desc(f.partition_desc).get(col)
-                total += f.num_rows if v is not None else 0
-            return total
+            return self._count_part_files(snap.files, col)
         has_default = info.column_defaults().get(col) is not None
         return self._count_col_files(snap.files, col, has_default)
+
+    @staticmethod
+    def _count_part_files(files, col: str) -> int | None:
+        """``COUNT(col)`` of a range-partition column over a live-file
+        list: the desc IS the value, so non-sentinel partitions
+        contribute ``num_rows`` and the NULL-sentinel partition none."""
+        from lakesoul_spark.io import partition as part_enc
+
+        total = 0
+        for f in files:
+            if f.num_rows < 0:
+                return None
+            v = part_enc.parse_desc(f.partition_desc).get(col)
+            total += f.num_rows if v is not None else 0
+        return total
 
     @staticmethod
     def _count_col_files(files, col: str,
@@ -1003,9 +990,10 @@ class LakeSoulTable:
             total += int(ent[1])
         return total
 
-    def _minmax_exact_from(self, snap, col: str,
-                           kind: str) -> tuple | None:
-        """Exact ``(min, max)`` over a provable snapshot, from the
+    @staticmethod
+    def _minmax_exact_files(files, col: str, has_default: bool,
+                            kind: str) -> tuple | None:
+        """Exact ``(min, max)`` over a live-file list, from the
         writer's computed-from-values extrema (``io/stats.py
         file_sums`` — footer binary stats may be truncated prefixes
         and float footer stats may omit NaN, so the claimed-exact
@@ -1013,18 +1001,7 @@ class LakeSoulTable:
         (SQL min/max = NULL); ``None`` = cannot prove. A file lacking
         the column contributes nothing under NULL fill and refuses
         under a declared default (the default value would be a live
-        extremum candidate nothing records)."""
-        if snap is None:
-            return None
-        has_default = self.info.column_defaults().get(col) is not None
-        return self._minmax_exact_files(snap.files, col, has_default,
-                                        kind)
-
-    @staticmethod
-    def _minmax_exact_files(files, col: str, has_default: bool,
-                            kind: str) -> tuple | None:
-        """Exact extrema over a live-file list (the GROUP BY fast
-        path calls this per partition group). ``kind``:
+        extremum candidate nothing records). ``kind``:
 
         - ``'str'`` — Python str comparison is codepoint order ==
           UTF-8 byte order, the total order Spark and DuckDB use for
@@ -1070,47 +1047,6 @@ class LakeSoulTable:
             if lo is None:
                 lo = float("nan")
         return (lo, hi)
-
-    def _avg_from(self, snap, col: str) -> tuple | None:
-        """Exact ``AVG(col)`` for an integer-family declared stats
-        column, bit-identical to the relational result, or ``None``
-        when unprovable. Spark's ``Average`` accumulates integer input
-        in DOUBLE; a double add is exact while every partial sum stays
-        under 2^53, and partial sums (any grouping Spark's partial-agg
-        tree picks) are bounded by Σ|x| ≤ Σ_files nonnull ×
-        max(|min|,|max|) — provable from the same per-file stats. When
-        that bound holds, double-accumulation equals the exact integer
-        sum in EVERY execution order, and the final ``sum/count``
-        IEEE division here reproduces Spark's bit-for-bit. Returns
-        ``(float_avg_or_None, nonnull)`` — ``None`` avg = SQL NULL
-        (zero non-null rows). Floats/decimals are never claimed
-        (order-dependent rounding / decimal divide semantics)."""
-        from lakesoul_spark.io.writer import table_schema as _ts
-
-        info = self.info
-        if col in info.range_partitions:
-            return None  # desc-materialized: no per-file sums exist
-        dtype = next(
-            (f.dataType.simpleString() for f in _ts(info).fields
-             if f.name == col), "",
-        )
-        if dtype not in self._SUM_EXACT_TYPES:
-            return None
-        if snap is None:
-            return None
-        has_default = info.column_defaults().get(col) is not None
-        return self._avg_files(snap.files, col, has_default)
-
-    def _avg_dec_from(self, snap, col: str, st: str) -> tuple | None:
-        """Exact ``AVG(col)`` for a DECIMAL declared stats column —
-        ``(value_string_or_None, result_type)`` with value ``None`` =
-        SQL NULL — or ``None`` when unprovable (see
-        :meth:`_avg_dec_files` for the proof obligations)."""
-        info = self.info
-        if col in info.range_partitions or snap is None:
-            return None
-        has_default = info.column_defaults().get(col) is not None
-        return self._avg_dec_files(snap.files, col, has_default, st)
 
     @staticmethod
     def _avg_dec_files(files, col: str, has_default: bool,
@@ -1171,10 +1107,21 @@ class LakeSoulTable:
 
     @staticmethod
     def _avg_files(files, col: str, has_default: bool) -> tuple | None:
-        """Provably-exact integer AVG over a live-file list (the GROUP
-        BY fast path calls this per partition group) — type and
-        range-partition gates are the CALLER's job (:meth:`_avg_from`
-        documents the 2^53 double-accumulation proof)."""
+        """Exact ``AVG(col)`` of an integer-family declared stats
+        column over a live-file list, bit-identical to the relational
+        result, or ``None`` when unprovable; type and range-partition
+        gates are the CALLER's job. Spark's ``Average`` accumulates
+        integer input in DOUBLE; a double add is exact while every
+        partial sum stays under 2^53, and partial sums (any grouping
+        Spark's partial-agg tree picks) are bounded by Σ|x| ≤ Σ_files
+        nonnull × max(|min|,|max|) — provable from the same per-file
+        stats. When that bound holds, double accumulation equals the
+        exact integer sum in EVERY execution order, and the final
+        ``sum/count`` IEEE division here reproduces Spark's bit for
+        bit. Returns ``(float_avg_or_None, nonnull)`` — a ``None`` avg
+        is SQL NULL (zero non-null rows). Floats and decimals never
+        take this path (order-dependent rounding / decimal divide
+        semantics)."""
         res = LakeSoulTable._sum_files(files, col, has_default)
         if res is None:
             return None

@@ -2001,15 +2001,14 @@ def test_groupby_fast_path_typed_desc_collapse(cat, spark, tmp_path):
 @pytest.mark.slow
 def test_groupby_fast_path_having_and_order_aggs(cat, spark):
     """HAVING tails and aggregate ORDER BY items on the metadata
-    GROUP BY fast path (r13): atoms over aggregates (including ones
-    NOT in the SELECT — computed as hidden columns, exactly as Spark
-    resolves them), output aliases, and grouping columns, composed
-    with AND/OR/NOT, parentheses, and IS [NOT] NULL — all still a
-    zero-scan LocalRelation. Comparison domains replicate Spark's
-    coercions (fractional literals are decimals; scientific/D
-    literals and double operands compare as doubles with NaN above
-    everything). Everything outside the grammar refuses into the
-    relational path, including statements Spark itself rejects."""
+    GROUP BY fast path (r13): predicates over aggregates (including
+    ones NOT in the SELECT — computed as hidden carrier columns,
+    exactly as Spark resolves them), output aliases, and grouping
+    columns — all still a zero-scan LocalRelation, with values, schema
+    and nullability equal to the relational plan's. Catalyst evaluates
+    the predicates over the carrier rows, so Spark's coercions apply
+    by construction. Statements Spark itself rejects surface Spark's
+    own error."""
     cat.sql(spark, """
         CREATE TABLE hvq (k BIGINT, i INT, dd DECIMAL(10,2), s STRING,
                           f DOUBLE, p STRING, q INT)
@@ -2106,6 +2105,15 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         "HAVING max(f)+count(*) > 3 ORDER BY p",
         "SELECT p, q, sum(i) AS si FROM hvq GROUP BY p, q "
         "HAVING sum(i)/count(*) BETWEEN 2 AND 9 ORDER BY p, q",
+        # Catalyst evaluates the HAVING over the carrier rows, so
+        # literal and decimal arithmetic, a mixed exact/double IN list
+        # and a BETWEEN bound that is an aggregate answer zero-scan
+        "SELECT p FROM hvq GROUP BY p HAVING count(*) + 1 > 3",
+        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)+sum(dd) > 0",
+        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)/count(*) > 1",
+        "SELECT p FROM hvq GROUP BY p HAVING count(*) IN (20, 2.1e1)",
+        "SELECT p FROM hvq GROUP BY p "
+        "HAVING count(i) BETWEEN 0 AND count(*)",
     ]
     for stq in fast_cases:
         got = cat.sql(spark, stq)
@@ -2123,28 +2131,6 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
         if "ORDER BY" not in stq:
             g, x = sorted(g), sorted(x)
         assert g == x, (stq, g[:3], x[:3])
-    # outside the grammar: refuse into the relational path (values
-    # still right there) — literal arithmetic, decimal arithmetic
-    for stq in [
-        "SELECT p FROM hvq GROUP BY p HAVING count(*) + 1 > 3",
-        # decimal +/- and division: Spark's precision-adjustment
-        # algebra is not replicated — fall back
-        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)+sum(dd) > 0",
-        "SELECT p FROM hvq GROUP BY p HAVING sum(dd)/count(*) > 1",
-        # a MIXED exact+double IN list: Spark coerces the whole list
-        # to one common type, which per-element domains can diverge
-        # from past 2^53 — must refuse into the relational path
-        "SELECT p FROM hvq GROUP BY p HAVING count(*) IN (20, 2.1e1)",
-        # BETWEEN with a column bound is outside the literal grammar
-        "SELECT p FROM hvq GROUP BY p "
-        "HAVING count(i) BETWEEN 0 AND count(*)",
-    ]:
-        got = cat.sql(spark, stq)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "Scan parquet" in plan, stq
-        want = spark.sql(stq.replace("FROM hvq", "FROM hvq_rel"))
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, want.collect())), stq
     # error parity: a non-grouped data column in HAVING must surface
     # Spark's own analysis error, never a fast-path answer
     with pytest.raises(Exception, match="UNRESOLVED|cannot be resolved"):
@@ -2181,12 +2167,11 @@ def test_groupby_fast_path_having_and_order_aggs(cat, spark):
 
 
 def test_groupby_fast_path_date_literals(cat, spark):
-    """DATE literals in HAVING atoms (r15): the strict zero-padded
-    ``DATE '…'`` / quoted-ISO forms answer zero-scan against date
-    grouping columns and date MIN/MAX stats (BETWEEN and IN ride the
-    same desugaring; date↔date operand comparisons too); any looser
-    spelling Spark's cast would accept refuses into the relational
-    path, which applies that cast itself."""
+    """DATE literals in HAVING (r15): ``DATE '…'`` and quoted string
+    forms answer zero-scan against date grouping columns and date
+    MIN/MAX stats (BETWEEN, IN and date↔date comparisons too). Catalyst
+    evaluates the HAVING over the carrier, so a looser spelling Spark's
+    cast accepts ('2024-3-2') answers zero-scan with that same cast."""
     cat.sql(spark, """
         CREATE TABLE hvd (k BIGINT, dt DATE, v INT, d DATE)
         USING lakesoul PARTITIONED BY (d)
@@ -2213,6 +2198,7 @@ def test_groupby_fast_path_date_literals(cat, spark):
         "SELECT d, max(dt) AS mx, min(dt) AS mn FROM hvd GROUP BY d "
         "HAVING max(dt) > min(dt) ORDER BY d",
         "SELECT d FROM hvd GROUP BY d HAVING d = '2024-03-02'",
+        "SELECT d FROM hvd GROUP BY d HAVING d > '2024-3-2'",
     ]
     for stq in fast_cases:
         got = cat.sql(spark, stq)
@@ -2230,15 +2216,6 @@ def test_groupby_fast_path_date_literals(cat, spark):
         if "ORDER BY" not in stq:
             g, x = sorted(g), sorted(x)
         assert g == x, (stq, g[:3], x[:3])
-    # loose date spellings Spark's cast accepts refuse into the
-    # relational path (same values, real scan)
-    stq = "SELECT d FROM hvd GROUP BY d HAVING d > '2024-3-2'"
-    got = cat.sql(spark, stq)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "Scan parquet" in plan, plan
-    want = spark.sql(stq.replace("FROM hvd", "FROM hvd_rel"))
-    assert sorted(map(str, got.collect())) == \
-        sorted(map(str, want.collect()))
 
 
 def test_partition_sum_avg_fast_path(cat, spark):
@@ -2425,25 +2402,31 @@ def test_float_stats_infinity_json_safe(cat, spark):
 
 
 def test_groupby_fast_path_order_by_limit(cat, spark):
-    """ORDER BY / LIMIT tails on the metadata GROUP BY fast path: the
-    (≤1024) group rows sort driver-side with typed keys (numeric
-    carriers never string-sort), replicating Spark's defaults
+    """ORDER BY / LIMIT / HAVING tails on the metadata GROUP BY fast
+    path: the (≤1024) group rows sort driver-side with typed keys
+    (numeric keys never string-sort), replicating Spark's defaults
     (ASC+NULLS FIRST, DESC+NULLS LAST) — still a LocalRelation, zero
-    scan jobs. Ordinals, expressions, and non-output columns refuse
-    into the relational path."""
+    scan jobs. Sort-key expressions and HAVING run through Catalyst
+    over the carrier rows (decimal arithmetic, unselected aggregates,
+    Spark's own DIVIDE_BY_ZERO); ordinals refuse into the relational
+    path."""
     cat.sql(spark, """
         CREATE TABLE obl (k BIGINT, v INT, d DECIMAL(12,2), p STRING,
-                          q INT)
+                          q INT, e DECIMAL(10,2))
         USING lakesoul PARTITIONED BY (p, q)
         TBLPROPERTIES('hashPartitions'='k','hashBucketNum'='2',
-                      'lakesoul.statsColumns'='v,d')
+                      'lakesoul.statsColumns'='v,d,e')
     """)
+    # e: per-q sums -250.00, 5.00, 950.00, 100025.00 — signs and digit
+    # counts that sort differently as strings than as decimals
     src = """
       SELECT id AS k, CAST(id*7%50-25 AS INT) AS v,
              CAST(id*1.25 AS DECIMAL(12,2)) AS d,
              CASE WHEN id%3=0 THEN 'a' WHEN id%3=1 THEN 'b'
                   ELSE NULL END AS p,
-             CAST(id%4 AS INT) AS q
+             CAST(id%4 AS INT) AS q,
+             CAST(element_at(array(-2.5, 0.05, 9.5, 1000.25),
+                             CAST(id%4 AS INT) + 1) AS DECIMAL(10,2)) AS e
       FROM range(400)
     """
     cat.sql(spark, f"INSERT INTO obl {src}")
@@ -2477,11 +2460,42 @@ def test_groupby_fast_path_order_by_limit(cat, spark):
     assert len(cat.sql(
         spark, "SELECT p, count(*) FROM obl GROUP BY p LIMIT 2"
     ).collect()) == 2
-    # ordinal / expression tails refuse into the relational path
-    for sql in (
-        "SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY 1",
-        "SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY n + 1",
-    ):
-        plan = cat.sql(spark, sql) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "LocalTableScan [" not in plan.split("\n")[0], (sql, plan)
+    # expression sort keys and an unselected aggregate sort key
+    check("SELECT p, count(*) AS n FROM obl GROUP BY p "
+          "ORDER BY n + 1, p")
+    check("SELECT p, count(*) AS n FROM obl GROUP BY p "
+          "ORDER BY sum(v) DESC, p")
+    # HAVING: decimal arithmetic over aggregates, with and without sort
+    check("SELECT p, q, sum(d) AS t FROM obl GROUP BY p, q "
+          "HAVING sum(d)/count(*) > 249 ORDER BY p, q")
+    check("SELECT q, count(*) AS n FROM obl GROUP BY q "
+          "HAVING sum(d) / 2 > 12450.25 AND max(v) IS NOT NULL ORDER BY q")
+    # decimal SUM / AVG / MIN / MAX aliases in ORDER BY and HAVING are
+    # decimals, not the carrier's strings: '100025.00' < '5.00' as text
+    check("SELECT q, sum(e) AS t FROM obl GROUP BY q ORDER BY t")
+    check("SELECT q, avg(e) AS a FROM obl GROUP BY q ORDER BY a DESC")
+    check("SELECT p, q, sum(e) AS t FROM obl GROUP BY p, q "
+          "ORDER BY t DESC, p")
+    check("SELECT q, min(e) AS lo, max(e) AS hi FROM obl GROUP BY q "
+          "ORDER BY lo, hi")
+    check("SELECT q, sum(e) AS t FROM obl GROUP BY q HAVING t > 100 "
+          "ORDER BY q")
+    check("SELECT q, avg(e) AS a FROM obl GROUP BY q "
+          "HAVING a BETWEEN -3 AND 10 ORDER BY a")
+    check("SELECT q, sum(e) AS t FROM obl GROUP BY q HAVING t < 6 "
+          "ORDER BY t DESC")
+    # an ordinal tail refuses into the relational path
+    plan = cat.sql(
+        spark, "SELECT p, count(*) AS n FROM obl GROUP BY p ORDER BY 1"
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan [" not in plan.split("\n")[0], plan
+    # error parity: group q=0 has min(q)=0, an ANSI DIVIDE_BY_ZERO on
+    # both paths (with ORDER BY the fast path defers to the scan)
+    for sql in ("SELECT q, sum(v) AS s FROM obl GROUP BY q "
+                "HAVING sum(v) / min(q) > 0",
+                "SELECT q, sum(v) AS s FROM obl GROUP BY q "
+                "HAVING sum(v) / min(q) > 0 ORDER BY s"):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            cat.sql(spark, sql).collect()
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            spark.sql(sql.replace(" obl", " obl_truth")).collect()

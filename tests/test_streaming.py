@@ -625,16 +625,17 @@ def test_stateful_first_event_strict_mode(spark, tmp_path):
 
 
 def test_latest_state_stream(spark, tmp_path):
-    """transformWithStateInPandas latest-state maintenance (the Flink
-    keyed-state + timers analog): last-writer-wins by order across
-    micro-batches, stale rows emit nothing, out-of-order late rows
-    lose."""
+    """applyInPandasWithState latest-state maintenance (the Flink
+    keyed-state + timers analog): last-writer-wins by order within and
+    across micro-batches, stale rows emit nothing, out-of-order late
+    rows lose."""
     from lakesoul_spark.streaming.stateful import latest_state_stream
 
     src = str(tmp_path / "src")
     schema = "seq long, k int, v string"
     batches = [
-        [(1, 1, "a1"), (2, 2, "b1")],
+        # k=3 gets two rows in ONE batch: only the newer one emits
+        [(1, 1, "a1"), (2, 2, "b1"), (5, 3, "c1"), (6, 3, "c2")],
         [(3, 1, "a2"), (1, 2, "late-loses")],   # k=2's seq 1 < seq 2
         [(4, 2, "b2")],
     ]
@@ -653,12 +654,12 @@ def test_latest_state_stream(spark, tmp_path):
     # the late (seq 1) row for k=2 emits NOTHING
     assert got == [
         (1, 1, "a1", "u"), (2, 2, "b1", "u"),
-        (3, 1, "a2", "u"), (4, 2, "b2", "u"),
+        (3, 1, "a2", "u"), (4, 2, "b2", "u"), (6, 3, "c2", "u"),
     ]
     # final state per key = batch last-writer-wins
     final = {r.k: r.v for r in spark.table("latest_state")
              .groupBy("k").agg(F.max_by("v", "seq").alias("v")).collect()}
-    assert final == {1: "a2", 2: "b2"}
+    assert final == {1: "a2", 2: "b2", 3: "c2"}
 
 
 def test_latest_state_stream_ttl_tombstones(spark, tmp_path):
@@ -693,89 +694,6 @@ def test_latest_state_stream_ttl_tombstones(spark, tmp_path):
         assert got == want, got
     finally:
         q.stop()
-
-
-def test_latest_state_stream_tws_engine(spark, tmp_path):
-    """engine='tws' runs the same semantics on Spark 4's
-    transformWithStateInPandas (typed ValueState + real per-key
-    timers). Gated: the TWS state client imports google.protobuf,
-    absent in minimal installs — engine='auto' then falls back to the
-    applyInPandasWithState path (asserted), and an explicit 'tws' ask
-    surfaces the real ImportError at stream start."""
-    from lakesoul_spark.streaming.stateful import latest_state_stream
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    src = str(tmp_path / "src")
-    schema = "seq long, k int, v string"
-    _df(spark, [(1, 1, "a"), (2, 1, "b")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    sdf = (spark.readStream.schema("seq long, k int, v string")
-           .option("maxFilesPerTrigger", 1).parquet(src))
-    if not has_protobuf:
-        # auto picks the portable engine and the result is identical
-        out = latest_state_stream(sdf, ["k"], order_col="seq", engine="auto")
-        q = (out.writeStream.format("memory").queryName("tws_fallback")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = sorted(map(tuple, spark.table("tws_fallback").collect()))
-        assert got == [(2, 1, "b", "u")]
-        pytest.skip("google.protobuf absent: TWS engine not runnable here")
-    out = latest_state_stream(sdf, ["k"], order_col="seq", engine="tws")
-    q = (out.writeStream.format("memory").queryName("tws_latest")
-         .option("checkpointLocation", str(tmp_path / "ck2"))
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("tws_latest").collect()))
-    assert got == [(2, 1, "b", "u")]
-
-
-@pytest.mark.slow
-def test_sessionize_tws_engine(spark, tmp_path):
-    """sessionize engine='tws' (transformWithStateInPandas, event-time
-    timers) emits the same sessions as the portable engine. Gated on
-    google.protobuf like the latest-state TWS test; without it, 'auto'
-    falls back to applyInPandasWithState (asserted via the session
-    result, same fixture as the basic sessionize test)."""
-    import datetime as dt
-
-    from lakesoul_spark.streaming.stateful import sessionize
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    src = str(tmp_path / "src")
-    schema = "user_id int, ts timestamp"
-    for b in [[(1, s(0)), (1, s(5))], [(1, s(30))],
-              [(99, s(1000))], [(99, s(2000))]]:
-        _df(spark, b, schema).coalesce(1).write.mode("append").parquet(src)
-    sdf = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(src)
-           .withWatermark("ts", "0 seconds"))
-    engine = "tws" if has_protobuf else "auto"
-    out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=10_000,
-                     engine=engine)
-    q = (out.writeStream.format("memory").queryName("tws_sessions")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.table("tws_sessions").collect() if r.user_id != 99
-    )
-    assert got == [(1, s(0), s(5), 2), (1, s(30), s(30), 1)]
-    if not has_protobuf:
-        pytest.skip("google.protobuf absent: TWS engine not runnable here")
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -830,19 +748,13 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert got == [(1, 11), (2, 12)]
 
 
-def test_sessionize_engine_parity(spark, tmp_path):
-    """The two sessionize engines — applyInPandasWithState +
-    EventTimeTimeout vs transformWithStateInPandas (typed ValueState +
-    event-time timers) — emit IDENTICAL sessions on a replay with
+def test_sessionize_out_of_order_islands(spark, tmp_path):
+    """sessionize emits the gaps-and-islands truth on a replay with
     out-of-order arrivals, cross-batch merges (a late middle event
-    bridging two islands), and multiple interleaved keys. Gated on
-    google.protobuf (the TWS state serializer); the dispatch contract
-    itself ('auto' falls back) is covered by the tws-engine tests."""
+    bridging two islands), and multiple interleaved keys."""
     import datetime as dt
 
     from lakesoul_spark.streaming.stateful import sessionize
-
-    pytest.importorskip("google.protobuf")
 
     t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
     s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
@@ -850,7 +762,9 @@ def test_sessionize_engine_parity(spark, tmp_path):
     # batches: islands per key delivered out of order; user 1's
     # events at 0/5 and 30 are later BRIDGED by the 18 s arrival
     # (gap 15 s: 0-5 | 30 becomes 0-30 once 18 lands); user 2 stays
-    # two sessions; user 99 is the watermark-draining sentinel
+    # two sessions; user 99 is the watermark-draining sentinel. The
+    # 300 s delay keeps the watermark (max ts 200 s - delay) below
+    # 0-5's closing point (5 + 15 s) until 18 lands
     batches = [
         [(1, s(0)), (2, s(100)), (1, s(5))],
         [(1, s(30)), (2, s(200))],
@@ -858,29 +772,22 @@ def test_sessionize_engine_parity(spark, tmp_path):
         [(99, s(10_000))],
         [(99, s(20_000))],
     ]
-    results = {}
-    for engine in ("apply", "tws"):
-        src = str(tmp_path / f"src_{engine}")
-        for b in batches:
-            _df(spark, b, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-        sdf = (spark.readStream.schema(schema)
-               .option("maxFilesPerTrigger", 1).parquet(src)
-               .withWatermark("ts", "60 seconds"))
-        out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=15_000,
-                         engine=engine)
-        name = f"parity_{engine}"
-        q = (out.writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", str(tmp_path / f"ck_{engine}"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        results[engine] = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events)
-            for r in spark.table(name).collect() if r.user_id != 99
-        )
-    assert results["apply"] == results["tws"], results
-    # and both match the gaps-and-islands truth
-    assert results["apply"] == [
+    src = str(tmp_path / "src")
+    for b in batches:
+        _df(spark, b, schema).coalesce(1).write.mode("append").parquet(src)
+    sdf = (spark.readStream.schema(schema)
+           .option("maxFilesPerTrigger", 1).parquet(src)
+           .withWatermark("ts", "300 seconds"))
+    out = sessionize(sdf, ["user_id"], ts_col="ts", gap_ms=15_000)
+    q = (out.writeStream.format("memory").queryName("islands")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = sorted(
+        (r.user_id, r.session_start, r.session_end, r.n_events)
+        for r in spark.table("islands").collect() if r.user_id != 99
+    )
+    assert got == [
         (1, s(0), s(30), 4), (2, s(100), s(100), 1),
         (2, s(200), s(200), 1),
     ]

@@ -41,15 +41,11 @@ def main() -> None:
     n_upserts = opt("--upserts", 10)
     upsert_rows = opt("--upsert-rows", 200_000)
     buckets = opt("--buckets", 16)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import lakesoul_spark as ls
     from pyspark.sql import functions as F
 
-    spark = ls.lakesoul_session(
-        app_name="contest_bench", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
+    spark = ls.lakesoul_session(app_name="contest_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     from lakesoul_spark.table import LakeSoulTable, write
